@@ -283,7 +283,7 @@ object SparkEntry {
     }),
 
     // ---- NNTSC raw history: P1 projection + P2 time range + P3 streams
-    //      + J1 broadcast label join (dbselect.py:390-532)
+    //      + J1 label attach (dbselect.py:390-532)
     "q_raw_select" -> ((s, dir) => {
       val labels = labelsFor(s, dir).view.filterKeys(Set("g0", "g1")).toMap
       // no rounding: raw passthrough doubles are bit-identical in both engines

@@ -528,6 +528,10 @@ object Splits {
     * caller knows the group count is tiny; AQE decides otherwise). The
     * working columns (`__ord`) are dropped; `__gcum` is the only
     * addition.
+    *
+    * `idCol` must be unique (and non-null) in `df`: the running sum joins
+    * back on it, so an id carried by k rows would come back k² times, each
+    * copy with one of the k cumulatives.
     */
   private def groupPrefix(
       df: DataFrame,

@@ -19,9 +19,10 @@ final case class AggSpec(column: String, func: String)
   *   - `selectMatrixData`      ≙ whole-period agg (dbselect.py:181-205)
   *
   * Design notes (Spark-first, 100 TB-minded):
-  *   - Labels ({label -> [stream_id…]}) become a tiny DataFrame that is
-  *     broadcast-joined onto the fact table — the CASE-expression labelling
-  *     of dbselect.py:615-630 with no shuffle of the fact side.
+  *   - Labels ({label -> [stream_id…]}) become the CASE-expression
+  *     labelling of dbselect.py:615-630: a `stream_id IN (…)` filter
+  *     pushed into the parquet scan plus a literal id → label lookup — no
+  *     join, no shuffle of the fact side (`attachLabels`).
   *   - Time-range + stream-membership predicates sit directly above the
   *     scan, so Catalyst pushes them into the parquet reader (min/max row
   *     group skipping replaces the reference's memcached activity cache).
@@ -45,13 +46,31 @@ object QueryEngine {
       .toDF("stream_id", LabelCol)
   }
 
-  /** Broadcast label join: tags each fact row with its label and restricts
-    * to requested streams in one step (inner join ≙ `stream_id IN (...)`,
-    * dbselect.py:674-723).
+  /** Tags each fact row with its label and restricts to the requested
+    * streams in one step (`stream_id IN (...)`, dbselect.py:674-723).
+    *
+    * When every stream id is listed once across the label map, this is
+    * the reference's CASE labelling (dbselect.py:615-630): an `IN` filter
+    * that Catalyst pushes into the parquet scan, plus a lookup in a
+    * literal id → label map. No join, so no broadcast job per query. A
+    * stream listed more than once (under two labels, or twice under one)
+    * must yield one row per listing, which a CASE cannot express; that
+    * case keeps the broadcast inner join against `labelFrame`. Both
+    * branches return the same rows in the same columns: stream_id first
+    * (with the data's type), the data's other columns, the label last.
     */
   def attachLabels(data: DataFrame, labels: Map[String, Seq[Long]]): DataFrame = {
-    val lf = labelFrame(data.sparkSession, labels)
-    data.join(broadcast(lf), Seq("stream_id"))
+    val pairs = labels.toSeq.flatMap { case (l, ids) => ids.map(_ -> l) }
+    val ids = pairs.map(_._1)
+    if (ids.distinct.size < ids.size)
+      data.join(broadcast(labelFrame(data.sparkSession, labels)), Seq("stream_id"))
+    else {
+      def quoted(c: String) = col("`" + c.replace("`", "``") + "`")
+      val rest = data.columns.toSeq.filter(_ != "stream_id").map(quoted)
+      val label = element_at(typedLit(pairs.toMap), col("stream_id")).as(LabelCol)
+      data.filter(col("stream_id").isin(ids: _*))
+        .select((col("stream_id") +: rest :+ label): _*)
+    }
   }
 
   /** `WHERE timestamp >= start AND timestamp <= end` (dbselect.py:725-730). */

@@ -327,6 +327,13 @@ object Rollup {
     * method just folds. `binsize <= 0` (or >= the window) collapses to
     * the single-bin matrix shape, `min_timestamp` included — the same
     * dispatch as selectAggregatedData's `singleBin`.
+    *
+    * The result comes back as ONE partition sorted by (label, binstart):
+    * globally ordered, like selectAggregatedData's orderBy, and drained in
+    * one job, where orderBy would add a range-sampling job, a sort
+    * exchange and one drain job per partition. One partition is enough
+    * because the result is at most labels × requested bins rows, all
+    * bound for the driver.
     */
   def aggregatedFromTier(
       tier: DataFrame,
@@ -466,6 +473,7 @@ object Rollup {
       .select((Seq(QueryEngine.LabelCol, "binstart") ++ names ++
         Seq("timestamp") ++ (if (singleBin) Seq("min_timestamp") else Nil))
         .map(col): _*)
-      .orderBy(col(QueryEngine.LabelCol), col("binstart"))
+      .coalesce(1)
+      .sortWithinPartitions(col(QueryEngine.LabelCol), col("binstart"))
   }
 }

@@ -41,6 +41,11 @@ object Service {
     * grid for `smoke` (the reference's 5..95-step-5 grid + max,
     * influx.py:663-668, packed :694-735) — each smoke column must also be
     * a stat column (buildMulti's contract).
+    *
+    * Serving cost: a request routed to a tier runs 2 Spark jobs, the
+    * tier scan with its partial fold and the single-partition result
+    * (`Rollup.aggregatedFromTier`). The tier frame itself is kept per path
+    * and re-read only when the tier's visible files change (`tierFrame`).
     */
   final case class RollupTiers(
       valueCol: String,
@@ -91,6 +96,32 @@ final class Service(
     queryTimeoutSec: Long = 0,
     rollups: Map[String, Service.RollupTiers] = Map.empty) {
   import Service._
+
+  // tier path → (visible file listing, frame read from it); see tierFrame
+  private val tierFrames =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long)], DataFrame)]()
+
+  /** The tier at `path` as a DataFrame, re-read only when its visible
+    * files change. Every request lists the tier (driver-side directory
+    * listing, no Spark job) and reuses the frame kept for that path while
+    * the (path, length) list of visible parquet files is the same; the
+    * read itself runs mergeSchema's footer job, which is what reuse saves.
+    * A new epoch, a committed fold, or a replayed epoch changes the list,
+    * so the next request reads again and sees it. Reuse is GC-safe: a
+    * frame is only used while its files are exactly the visible ones, and
+    * the grace GC never deletes a file that is still visible. Concurrent
+    * misses may each read; the last one kept wins, and either is correct.
+    */
+  private[graft] def tierFrame(path: String): DataFrame = {
+    val listing = graft.streaming.RollupStream.listTier(path)
+    val kept = tierFrames.get(path)
+    if (kept != null && kept._1 == listing.files) kept._2
+    else {
+      val df = graft.streaming.RollupStream.readTier(spark, listing)
+      tierFrames.put(path, (listing.files, df))
+      df
+    }
+  }
 
   /** Tag the calling thread with a fresh job group and arm the watchdog.
     * The group is deliberately NOT cleared on exit: chunked history
@@ -222,6 +253,14 @@ final class Service(
     * backend choice, and within the collection the routed and fallback
     * plans can never disagree about which points count. Collections
     * without tiers keep dbselect's inclusive stop untouched.
+    *
+    * A routed request is 2 Spark jobs: the tier scan with the partial
+    * fold, and the result. The tier frame comes from `tierFrame` (kept
+    * while the tier's visible (path, length) file list is unchanged, so no
+    * schema-inference job per request), labels are a pushed `IN` plus a
+    * literal map (`QueryEngine.attachLabels`), and the result is one
+    * partition sorted by (label, binstart): it holds at most labels ×
+    * requested bins rows, so it drains in one job with no range sort.
     */
   private[graft] def aggFrame(
       collection: String,
@@ -247,7 +286,7 @@ final class Service(
             (if (singleBin) stop - start >= b else binsize % b == 0))
       } yield {
         val t = graft.rollup.Rollup.aggregatedFromTier(
-          graft.streaming.RollupStream.readTier(spark, c.tiers(bin)),
+          tierFrame(c.tiers(bin)),
           labels, aggs, start, stop, binsize, primaryCol = c.valueCol,
           sparseClamp = c.smokeSparseClamp,
           smokeNearestRank = c.smokeNearestRank)
@@ -304,6 +343,10 @@ final class Service(
     * dashboard counts. History/aggregate endpoints keep the reference's
     * stop-INCLUSIVE dbselect windows; the matrix endpoint alone is
     * half-open, exactly like the backends they mirror.
+    *
+    * Cost: a routed matrix is 2 Spark jobs, as in `aggFrame` — the cached
+    * tier frame (`tierFrame`), the label lookup with no join, and a
+    * single sorted partition of at most one row per label.
     */
   private[graft] def matrixFrame(
       collection: String,
@@ -321,7 +364,7 @@ final class Service(
           stop - start >= b && start % b == 0 && stop % b == 0)
       } yield {
         val m = graft.rollup.Rollup.matrixFromTier(
-          graft.streaming.RollupStream.readTier(spark, cfg.tiers(bin)),
+          tierFrame(cfg.tiers(bin)),
           labels, aggs, start, stop, primaryCol = cfg.valueCol,
           sparseClamp = cfg.smokeSparseClamp,
           smokeNearestRank = cfg.smokeNearestRank)

@@ -507,8 +507,10 @@ private[serve] final class LiveRelay(
   // label's OWN lasthist; only consulted in live mode
   private var gate = Map.empty[(String, Long), Long]
 
+  // stream ids arrive as the data table's int or as long (callers that
+  // widen them); read either as Long
   private def ts(r: Row): Long = r.getLong(r.schema.fieldIndex("timestamp"))
-  private def sid(r: Row): Long = r.getLong(r.schema.fieldIndex("stream_id"))
+  private def sid(r: Row): Long = r.getAs[Number](r.schema.fieldIndex("stream_id")).longValue
 
   /** Stream subscribed + timestamp inside the window. */
   private def admit(rows: Seq[Row]): Seq[Row] =
@@ -518,7 +520,7 @@ private[serve] final class LiveRelay(
       !r.isNullAt(ti) && !r.isNullAt(si) && {
         val t = r.getLong(ti)
         t >= start && (stop == 0 || t <= stop) &&
-          streamLabels.contains(r.getLong(si))
+          streamLabels.contains(sid(r))
       }
     }
 

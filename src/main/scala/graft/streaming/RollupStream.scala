@@ -325,12 +325,50 @@ object RollupStream {
       .sortBy(_._1)
   }
 
-  /** Crash-consistent tier read: the highest committed fold plus source
-    * epochs at or above its boundary; uncommitted folds and covered-but-
-    * not-yet-GC'd sources are filtered out. With no fold committed this is
-    * a plain read of the epoch partials.
+  /** One listing of a tier directory: the epochs a read would see and the
+    * data files under them. `epochs` is None for a plain parquet dir
+    * without the epoch layout. `files` holds (path, length) of every
+    * visible data file, sorted by path. A new epoch, a committed fold or a
+    * rewritten (replayed) epoch changes `files`, so it serves as the cache
+    * key for a frame read from this listing (Service's tier-frame cache).
     */
-  def readTier(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+  final case class TierListing(path: String, epochs: Option[Seq[Long]], files: Seq[(String, Long)])
+
+  /** The visibility rules of a crash-consistent tier read, without reading:
+    * the highest committed fold plus source epochs at or above its
+    * boundary; uncommitted folds and covered-but-not-yet-GC'd sources are
+    * left out. With no fold committed, every source epoch is visible. A
+    * crashed (uncommitted) fold dir is never visible.
+    */
+  def listTier(path: String): TierListing = {
+    val dir = new java.io.File(path)
+    val epochDirs =
+      if (!dir.exists || dir.listFiles == null) Seq.empty[Long]
+      else dir.listFiles.toSeq
+        .filter(f => f.isDirectory && f.getName.startsWith(s"${IngestStream.EpochCol}="))
+        .map(_.getName.stripPrefix(s"${IngestStream.EpochCol}=").toLong)
+    val epochs = committedFolds(path).lastOption match {
+      case Some((k, boundary)) => Some(epochDirs.filter(e => e == -k || e >= boundary))
+      case None if epochDirs.exists(_ >= 0) => Some(epochDirs.filter(_ >= 0))
+      case None => None
+    }
+    val roots = epochs.fold(Seq(dir))(
+      _.map(e => new java.io.File(dir, s"${IngestStream.EpochCol}=$e")))
+    def dataFiles(f: java.io.File): Seq[(String, Long)] =
+      if (f.getName.startsWith("_") || f.getName.startsWith(".")) Nil
+      else if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(dataFiles)
+      else Seq(f.getPath -> f.length)
+    val files = roots.flatMap(r => Option(r.listFiles).toSeq.flatten.flatMap(dataFiles))
+    TierListing(path, epochs.map(_.sorted), files.sortBy(_._1))
+  }
+
+  /** Crash-consistent tier read of the current listing ([[listTier]]). */
+  def readTier(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    readTier(spark, listTier(path))
+
+  /** Reads what `listing` names: its visible epoch dirs, or the plain dir. */
+  def readTier(spark: org.apache.spark.sql.SparkSession, listing: TierListing): DataFrame = {
+    val path = listing.path
     // schema evolution: tiers persisted before the bin-min timestamp was
     // added (tsn) default it to the bin-max. Three dir states to cover:
     // all-old (no tsn column anywhere — add it), MIXED old+new files
@@ -351,32 +389,19 @@ object RollupStream {
     // concurrency spec). Visible paths are never GC'd until a NEWER fold
     // has been committed for a full cycle, so this listing is race-free
     // under the grace contract.
-    val dir = new java.io.File(path)
-    val epochDirs =
-      if (!dir.exists || dir.listFiles == null) Seq.empty[Long]
-      else dir.listFiles.toSeq
-        .filter(f => f.isDirectory && f.getName.startsWith(s"${IngestStream.EpochCol}="))
-        .map(_.getName.stripPrefix(s"${IngestStream.EpochCol}=").toLong)
-    def readEpochs(es: Seq[Long]) =
-      spark.read
-        .option("mergeSchema", "true")
-        .option("basePath", path)
-        .parquet(es.map(e => s"$path/${IngestStream.EpochCol}=$e"): _*)
-        .drop(IngestStream.EpochCol)
-    committedFolds(path).lastOption match {
-      case Some((k, boundary)) =>
-        val visible = epochDirs.filter(e => e == -k || e >= boundary)
-        withTsn(readEpochs(visible))
-      case None if epochDirs.exists(_ >= 0) =>
-        // no committed fold: sources only — a fold dir may exist from a
-        // crashed attempt and must NOT be read
-        withTsn(readEpochs(epochDirs.filter(_ >= 0)))
+    listing.epochs match {
+      case Some(visible) =>
+        withTsn(spark.read
+          .option("mergeSchema", "true")
+          .option("basePath", path)
+          .parquet(visible.map(e => s"$path/${IngestStream.EpochCol}=$e"): _*)
+          .drop(IngestStream.EpochCol))
       case None =>
         // non-epoch layout (plain parquet dir) or nothing readable yet.
         // If partition discovery still surfaces an epoch column (only
         // NEGATIVE epoch dirs exist — a crashed fold attempt after manual
         // cleanup or a partial restore), keep the `epoch >= 0` filter the
-        // explicit-path branches apply: an uncommitted fold must never be
+        // explicit-path branch applies: an uncommitted fold must never be
         // served as data.
         val plain = spark.read.option("mergeSchema", "true").parquet(path)
         val safe =

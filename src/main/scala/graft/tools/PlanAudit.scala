@@ -72,16 +72,20 @@ object PlanAudit {
     }
 
     guarded("binned agg") {
-      // 2. label join is a broadcast hash join, no shuffle of the fact side
+      // 2. labels attach with no join at all: a `stream_id IN (…)` pushed
+      //    into the parquet scan plus a literal id → label lookup (the
+      //    reference's CASE labelling) — no broadcast job, and never a
+      //    shuffle of the fact side. tsEvents aliases the file's user_id
+      //    as stream_id, so the pushed filter names user_id.
       val agg = QueryEngine.selectAggregatedData(
         evAll, labels,
         Seq(AggSpec("value", "avg")), 0L, 1900000000L, 3600)
       agg.collect() // run once so AQE finalizes the plan (codegen stages appear)
       // whole-stage codegen shows as "*(n) " stage prefixes in the simple
       // plan string
-      check("binned agg: broadcast label join + codegen", plan(agg),
-        mustContain = Seq("BroadcastHashJoin", "*(1)"),
-        mustNot = Seq("SortMergeJoin"))
+      check("binned agg: label IN pushed to the scan, no join + codegen", plan(agg),
+        mustContain = Seq("In(user_id,", "*(1)"),
+        mustNot = Seq("Join", "SortMergeJoin"))
     }
 
     guarded("q3") {
@@ -434,11 +438,11 @@ object PlanAudit {
       if (nScans == 1) println("AUDIT ok   q_freq: single scan of the binned input")
       else { failures += 1; println(s"AUDIT FAIL q_freq scans binned input $nScans times") }
       val nExch = "Exchange".r.findAllIn(freqPlan).length
-      // binned agg shuffle + label broadcast + label window shuffle + the
-      // final orderBy range exchange = 4; more means a downstream stage
-      // (byDiff / total window / final agg) failed to reuse the label
-      // partitioning and re-shuffled
-      if (nExch <= 4) println(s"AUDIT ok   q_freq: $nExch exchanges (agg, broadcast, window, sort)")
+      // binned agg shuffle + label window shuffle + the final orderBy range
+      // exchange = 3 (labels attach without a join); more means a
+      // downstream stage (byDiff / total window / final agg) failed to
+      // reuse the label partitioning and re-shuffled
+      if (nExch <= 3) println(s"AUDIT ok   q_freq: $nExch exchanges (agg, window, sort)")
       else { failures += 1; println(s"AUDIT FAIL q_freq has $nExch exchanges") }
     }
 
@@ -539,11 +543,11 @@ object PlanAudit {
       check("mode fold: most_of_maps rides the single agg pass", modePlan,
         mustContain = Seq("t3600m", "most_of_maps"),
         mustNot = Seq("events.parquet", "SortMergeJoin", "Generate"))
-      // the only join allowed is the broadcast label attach; exchanges =
-      // group-by shuffle + label BroadcastExchange + final sort range = 3
+      // labels attach without a join and the single-partition result
+      // needs no range sort, so the group-by shuffle is the only exchange
       // (the pre-r8 shape added an exchange + join per mode column)
       val modeExch = "Exchange".r.findAllIn(modePlan).length
-      if (modeExch <= 3) println(s"AUDIT ok   mode fold: $modeExch exchanges (agg, broadcast, sort)")
+      if (modeExch <= 1) println(s"AUDIT ok   mode fold: $modeExch exchange (agg)")
       else { failures += 1; println(s"AUDIT FAIL mode fold has $modeExch exchanges") }
 
       //     nearest-rank fold (r10, gated by q_tier_smoke_nr): the
@@ -566,7 +570,7 @@ object PlanAudit {
         mustContain = Seq("t3600nr"),
         mustNot = Seq("events.parquet", "Generate", "SortMergeJoin"))
       val nrExch = "Exchange".r.findAllIn(nrPlan).length
-      if (nrExch <= 3) println(s"AUDIT ok   nr fold: $nrExch exchanges (agg, broadcast, sort)")
+      if (nrExch <= 1) println(s"AUDIT ok   nr fold: $nrExch exchange (agg)")
       else { failures += 1; println(s"AUDIT FAIL nr fold has $nrExch exchanges") }
     }
 

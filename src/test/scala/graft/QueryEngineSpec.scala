@@ -27,6 +27,41 @@ class QueryEngineSpec extends SparkSpec {
     assert(a100.getAs[Long]("timestamp") === 150L) // max ts in bin
   }
 
+  test("attachLabels: IN + literal map and broadcast join return the old join's rows") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.broadcast
+    // a parquet scan with int stream ids that are not the first column
+    val dir = java.nio.file.Files.createTempDirectory("labels").toString + "/d"
+    Seq((1, 100L, 1.0), (2, 110L, 2.0), (3, 120L, 3.0), (2, 130L, 4.0), (7, 140L, 5.0))
+      .toDF("stream_id", "timestamp", "value")
+      .select($"timestamp", $"stream_id", $"value")
+      .write.parquet(dir)
+    val data = spark.read.parquet(dir)
+    def oldJoin(labels: Map[String, Seq[Long]]) =
+      data.join(broadcast(QueryEngine.labelFrame(spark, labels)), Seq("stream_id"))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    def plan(df: DataFrame) = df.queryExecution.executedPlan.toString
+    val unique = Map("a" -> Seq(1L, 3L), "b" -> Seq(2L), "c" -> Seq(9L))
+    val overlapping = Map("a" -> Seq(1L, 2L), "b" -> Seq(2L, 3L))
+    val repeated = Map("a" -> Seq(2L, 2L, 3L))
+    for (labels <- Seq(unique, overlapping, repeated, Map.empty[String, Seq[Long]])) {
+      val got = QueryEngine.attachLabels(data, labels)
+      val want = oldJoin(labels)
+      assert(got.schema.map(f => (f.name, f.dataType)) ===
+        want.schema.map(f => (f.name, f.dataType)), labels)
+      assert(rows(got) === rows(want), labels)
+    }
+    // unique ids: no join, and the IN is pushed into the parquet scan; a
+    // stream listed twice keeps the broadcast join
+    val u = QueryEngine.attachLabels(data, unique)
+    assert(!plan(u).contains("Join"), plan(u))
+    assert(plan(u).contains("In(stream_id,"), plan(u))
+    assert(plan(QueryEngine.attachLabels(data, overlapping)).contains("BroadcastHashJoin"))
+    assert(plan(QueryEngine.attachLabels(data, repeated)).contains("BroadcastHashJoin"))
+    assert(rows(QueryEngine.attachLabels(data, overlapping).filter($"stream_id" === 2))
+      .length === 4) // two rows of stream 2, each under both labels
+  }
+
   test("single-bin (matrix) mode adds min_timestamp") {
     val data = ts((1L, 100L, 1.0), (1L, 900L, 3.0))
     val out = QueryEngine

@@ -699,4 +699,132 @@ class ServiceSpec extends SparkSpec {
     val resolved = PathIntern.resolve(rows, dim2).collect()
     assert(resolved.forall(!_.isNullAt(resolved(0).fieldIndex("path_id"))))
   }
+
+  /** Spark jobs `body` submits from this thread. The jobs are tagged by a
+    * job group; a marker job submitted after them proves the (FIFO)
+    * listener bus has delivered every earlier job start.
+    */
+  private def jobsRun(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener stalled")
+      jobs.get
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  /** A Service over one 60 s tier at `dir`, collection "c". */
+  private def tierService(dir: String) = new Service(
+    spark,
+    data = Map("c" -> Seq.empty[(Long, Long, Double)].toDF("stream_id", "timestamp", "value")),
+    streams = Map.empty,
+    rollups = Map("c" -> Service.RollupTiers("value", Map(60L -> dir))))
+
+  test("tier frame cache: appended epochs show, folds change no answer, crashed folds stay hidden") {
+    import graft.streaming.RollupStream
+    val dir = java.nio.file.Files.createTempDirectory("graftcache").toString + "/t60"
+    val t0 = 1704067200L
+    def batch(ids: Seq[Long], from: Int) =
+      ids.flatMap(s => (from until from + 6).map(i => (s, t0 + i * 20L, (i * 3 + s).toDouble)))
+    val b0 = batch(Seq(0L, 1L, 2L), 0)
+    val b1 = batch(Seq(0L, 2L), 6)
+    val b2 = batch(Seq(1L), 12)
+    def append(b: Seq[(Long, Long, Double)], epoch: Long): Unit =
+      RollupStream.appendPartials(
+        b.toDF("stream_id", "timestamp", "value"), 60, "value", dir, epoch)
+    val lbl = Map("x" -> Seq(0L, 1L), "y" -> Seq(2L))
+    val aggs = Seq(AggSpec("value", "count"), AggSpec("value", "sum"))
+    val tsvc = tierService(dir)
+    def served = tsvc.matrix("c", lbl, aggs, t0, t0 + 600)
+      .map(r => (r.getAs[String]("nntsclabel"), r.getAs[Long]("value_count"),
+        r.getAs[Double]("value_sum")))
+    def expected(ev: Seq[(Long, Long, Double)]) =
+      lbl.toSeq.sortBy(_._1).map { case (l, ids) =>
+        val in = ev.filter(e => ids.contains(e._1))
+        (l, in.size.toLong, in.map(_._3).sum)
+      }
+
+    append(b0, 0L)
+    assert(served === expected(b0))
+    val f0 = tsvc.tierFrame(dir)
+    assert(tsvc.tierFrame(dir) eq f0, "unchanged tier: the frame is reused")
+    // a new epoch after a request: the next request reads again and sees it
+    append(b1, 1L)
+    assert(served === expected(b0 ++ b1))
+    assert(!(tsvc.tierFrame(dir) eq f0))
+    // a committed fold swaps the visible files; the answer stays the same
+    val f1 = tsvc.tierFrame(dir)
+    RollupStream.compact(spark, dir)
+    assert(served === expected(b0 ++ b1))
+    assert(!(tsvc.tierFrame(dir) eq f1))
+    // a fold that dies before its commit marker stays invisible: its rows
+    // (which re-cover every epoch) must not be counted a second time
+    append(b2, 2L)
+    assert(served === expected(b0 ++ b1 ++ b2))
+    intercept[IllegalStateException](RollupStream.compact(spark, dir,
+      onStep = st => if (st == "fold-written") throw new IllegalStateException("crash")))
+    assert(new java.io.File(dir, "__epoch=-2").isDirectory, "the crashed fold left its files")
+    assert(RollupStream.listTier(dir).files.forall(!_._1.contains("__epoch=-2")))
+    assert(served === expected(b0 ++ b1 ++ b2))
+  }
+
+  test("tier-routed matrix and aggregate requests run 2 Spark jobs each") {
+    import graft.streaming.RollupStream
+    val dir = java.nio.file.Files.createTempDirectory("graftjobs").toString + "/t60"
+    val t0 = 1704067200L
+    val ev = (0 until 4).flatMap(s => (0 until 90).map(i => (s.toLong, t0 + i * 20L, i.toDouble)))
+      .toDF("stream_id", "timestamp", "value")
+    RollupStream.appendPartials(ev, 60, "value", dir, epoch = 0L)
+    val tsvc = tierService(dir)
+    val lbl = Map("x" -> Seq(0L, 1L), "y" -> Seq(2L, 3L))
+    val aggs = Seq(AggSpec("value", "avg"), AggSpec("value", "max"))
+    tsvc.matrix("c", lbl, aggs, t0, t0 + 1800) // first request reads the tier
+    assert(jobsRun(assert(tsvc.matrix("c", lbl, aggs, t0, t0 + 1800).size === 2)) === 2)
+    assert(jobsRun(assert(
+      tsvc.aggregate("c", lbl, aggs, t0, t0 + 1800, 600).flatMap(_.rows).size === 6)) === 2)
+  }
+
+  test("tier-served aggregate spanning shuffle partitions: (label, binstart) order, label-contiguous chunks") {
+    import graft.streaming.RollupStream
+    val dir = java.nio.file.Files.createTempDirectory("graftorder").toString + "/t60"
+    val t0 = 1704067200L
+    // 6 labels × 30 requested bins = 180 fold keys, hashed over the
+    // session's 4 shuffle partitions (partition coalescing off, so the
+    // fold really does run in several partitions)
+    val ev = (0 until 12).flatMap(s => (0 until 180).map(i => (s.toLong, t0 + i * 20L, (i % 11).toDouble)))
+      .toDF("stream_id", "timestamp", "value")
+    RollupStream.appendPartials(ev, 60, "value", dir, epoch = 0L)
+    val tsvc = tierService(dir)
+    val lbl = (0 until 6).map(l => s"l$l" -> Seq(l.toLong, l + 6L)).toMap
+    val aggs = Seq(AggSpec("value", "avg"), AggSpec("value", "count"))
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val frame = tsvc.aggFrame("c", lbl, aggs, t0, t0 + 3600, 120)
+      assert(frame.queryExecution.executedPlan.toString.contains("t60"), "tier-routed")
+      val got = frame.collect().map(r => (r.getAs[String]("nntsclabel"), r.getAs[Long]("binstart"))).toSeq
+      assert(got.size === 6 * 30)
+      assert(got === got.sorted)
+      val chunks = tsvc.aggregate("c", lbl, aggs, t0, t0 + 3600, 120).toSeq
+      assert(chunks.map(_.label) === lbl.keys.toSeq.sorted, "one contiguous run per label")
+      assert(chunks.flatMap(c => c.rows.map(r => (c.label, r.getAs[Long]("binstart")))) === got)
+    } finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

@@ -730,39 +730,51 @@ class StreamingSpec extends SparkSpec {
     RollupStream.appendPartials(b2, 60, "value", dir, epoch = 1L)
     val expected = Rollup.build(b1.unionByName(b2), 60, "value")
       .agg(sum("cnt")).as[Long].collect().head
+    // two readers: a direct tier read, and a routed matrix through Service
+    // (which keeps its tier frame across requests while the files match)
+    val svc = new graft.serve.Service(
+      spark,
+      data = Map("c" -> b1),
+      streams = Map.empty,
+      rollups = Map("c" -> graft.serve.Service.RollupTiers("value", Map(60L -> dir))))
+    val reads: Seq[(String, () => Long)] = Seq(
+      "readTier" -> (() => RollupStream.readTier(spark, dir)
+        .agg(sum("cnt")).as[Long].collect().head),
+      "Service" -> (() => svc.matrix("c", Map("all" -> Seq(1L, 2L)),
+        Seq(graft.query.AggSpec("value", "count")), 0L, 120L).head.getAs[Long]("value")))
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val iter = new java.util.concurrent.atomic.AtomicLong(0)
-    val reader = new Thread(() => {
-      while (!stop.get) {
-        try {
-          val n = RollupStream.readTier(spark, dir)
-            .agg(sum("cnt")).as[Long].collect().head
-          if (n != expected) errors.add(s"saw $n (want $expected)")
-        } catch { case e: Throwable => errors.add(s"read failed: ${e.getMessage}") }
-        iter.incrementAndGet()
-      }
-    })
+    val iters = reads.map(_ => new java.util.concurrent.atomic.AtomicLong(0))
+    val readers = reads.zip(iters).map { case ((name, read), iter) =>
+      new Thread(() => {
+        while (!stop.get) {
+          try {
+            val n = read()
+            if (n != expected) errors.add(s"$name saw $n (want $expected)")
+          } catch { case e: Throwable => errors.add(s"$name read failed: ${e.getMessage}") }
+          iter.incrementAndGet()
+        }
+      })
+    }
     def awaitFresh(): Unit = {
-      val target = iter.get + 2
+      val targets = iters.map(_.get + 2)
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (iter.get < target) {
+      while (iters.zip(targets).exists { case (i, t) => i.get < t }) {
         if (System.nanoTime() > deadline) sys.error("reader stalled")
         Thread.sleep(10)
       }
     }
-    reader.start()
+    readers.foreach(_.start())
     try {
       awaitFresh()
       RollupStream.compact(spark, dir) // fold 1 commits; sources linger
       awaitFresh() // one full reader cycle of grace
       RollupStream.compact(spark, dir) // grace GC retires covered sources
       awaitFresh()
-    } finally { stop.set(true); reader.join(30000) }
+    } finally { stop.set(true); readers.foreach(_.join(30000)) }
     assert(errors.isEmpty, s"concurrent tier readers observed: ${errors.toArray.mkString("; ")}")
     // steady state: the fold alone serves the same totals
-    assert(RollupStream.readTier(spark, dir)
-      .agg(sum("cnt")).as[Long].collect().head === expected)
+    reads.foreach { case (name, read) => assert(read() === expected, name) }
   }
 
   test("subscribe: history-before-live with lasthist dedupe (X1)") {

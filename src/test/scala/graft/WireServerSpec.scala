@@ -293,6 +293,49 @@ class WireServerSpec extends SparkSpec {
     } finally { sock.close(); server.close() }
   }
 
+  test("live rows with the data table's int stream ids reach a wire subscriber") {
+    import graft.streaming.Markers
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+    // FilePoller publishes the rows it wrote, in the collection's data
+    // schema, where stream_id is an int (CollectionSpec.dataSchema)
+    val schema = graft.schema.Collections.byName("amp-icmp").dataSchema
+    assert(schema("stream_id").dataType === org.apache.spark.sql.types.IntegerType)
+    def row(sid: Int, ts: Long, median: Int) = new GenericRowWithSchema(
+      Array[Any](sid, ts, median, 84.toShort, 0.toShort, 1.toShort, 0.0, Seq(median)), schema)
+    val lbus = new Markers.LiveBus
+    val server = new WireServer(svc, live = Some(lbus))
+    val sock = new Socket("127.0.0.1", server.boundPort)
+    try {
+      val out = new DataOutputStream(sock.getOutputStream)
+      val in = new DataInputStream(sock.getInputStream)
+      sock.setSoTimeout(30000)
+      // a window past the corpus: no history, the relay goes live at once
+      out.write(Wire.pack(0,
+        """{"request":"subscribe","collection":"amp-external",
+          |"labels":{"a":[1]},"columns":["median"],
+          |"start":1906745600,"stop":0}""".stripMargin.getBytes("UTF-8")))
+      out.flush()
+      def readFrame(): Wire.Message = {
+        val header = new Array[Byte](Wire.HeaderLen)
+        in.readFully(header)
+        val body = new Array[Byte](java.nio.ByteBuffer.wrap(header, 3, 4).getInt)
+        in.readFully(body)
+        Wire.Message(header(0) & 0xff, ((header(1) & 0xff) << 8) | (header(2) & 0xff), body)
+      }
+      assert(readFrame().msgType === Wire.VersionCheck)
+      var m = readFrame()
+      while (m.msgType == Wire.History) m = readFrame()
+      assert(m.msgType === Wire.Subscribe)
+      lbus.publish(Markers.LiveBatch("amp-external",
+        Seq(row(1, 1906745601L, 17), row(2, 1906745602L, 23))))
+      val live = readFrame()
+      assert(live.msgType === Wire.Live)
+      val json = new String(live.body, "UTF-8")
+      assert(json.contains(""""stream_id":1""") && json.contains(""""median":17"""))
+      assert(!json.contains(""""stream_id":2"""))
+    } finally { sock.close(); server.close() }
+  }
+
   test("live relay: rows during backfill buffer and release across the seam") {
     import graft.serve.{WireServer => _}
     import graft.streaming.Markers
