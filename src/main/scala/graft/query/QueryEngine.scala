@@ -3,6 +3,7 @@ package graft.query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** One (column, aggregation-function) request, mirroring the reference's
   * `aggcols` pairs (/root/reference/libnntsc/dbselect.py:803-835).
@@ -23,6 +24,9 @@ final case class AggSpec(column: String, func: String)
   *     labelling of dbselect.py:615-630: a `stream_id IN (…)` filter
   *     pushed into the parquet scan plus a literal id → label lookup — no
   *     join, no shuffle of the fact side (`attachLabels`).
+  *   - Window bounds and stream ids are bound parameters of the generated
+  *     code (`Bound`), not inlined literals, so requests that differ only
+  *     in them reuse one compiled plan.
   *   - Time-range + stream-membership predicates sit directly above the
   *     scan, so Catalyst pushes them into the parquet reader (min/max row
   *     group skipping replaces the reference's memcached activity cache).
@@ -52,7 +56,9 @@ object QueryEngine {
     * When every stream id is listed once across the label map, this is
     * the reference's CASE labelling (dbselect.py:615-630): an `IN` filter
     * that Catalyst pushes into the parquet scan, plus a lookup in a
-    * literal id → label map. No join, so no broadcast job per query. A
+    * literal id → label map. No join, so no broadcast job per query.
+    * The ids are one set-valued parameter (`Bound.isin`), so the generated
+    * code is the same whatever ids, or how many, a request sends. A
     * stream listed more than once (under two labels, or twice under one)
     * must yield one row per listing, which a CASE cannot express; that
     * case keeps the broadcast inner join against `labelFrame`. Both
@@ -68,20 +74,25 @@ object QueryEngine {
       def quoted(c: String) = col("`" + c.replace("`", "``") + "`")
       val rest = data.columns.toSeq.filter(_ != "stream_id").map(quoted)
       val label = element_at(typedLit(pairs.toMap), col("stream_id")).as(LabelCol)
-      data.filter(col("stream_id").isin(ids: _*))
+      data.filter(Bound.isin(col("stream_id"), data.schema("stream_id").dataType, ids))
         .select((col("stream_id") +: rest :+ label): _*)
     }
   }
 
-  /** `WHERE timestamp >= start AND timestamp <= end` (dbselect.py:725-730). */
+  /** `WHERE timestamp >= start AND timestamp <= end` (dbselect.py:725-730),
+    * with both bounds bound parameters (`Bound`).
+    */
   def filterTime(data: DataFrame, start: Long, stop: Long): DataFrame =
-    data.filter(col("timestamp").between(start, stop))
+    data.filter(col("timestamp")
+      .between(Bound.long(data, "timestamp", start), Bound.long(data, "timestamp", stop)))
 
   /** `binstart = timestamp - timestamp % binsize`; binsize <= 0 means one
     * bin anchored at `start` covering the whole window (dbselect.py:295-307).
+    * `start` and `binsize` are bound parameters.
     */
   def binstart(start: Long, binsize: Long): Column =
-    if (binsize <= 0) lit(start) else col("timestamp") - (col("timestamp") % binsize)
+    if (binsize <= 0) Bound.long(start, LongType)
+    else col("timestamp") - (col("timestamp") % Bound.long(binsize, LongType))
 
   /** Raw history: sanitised projection with forced columns
     * (dbselect.py:440-487) + time/stream predicates, ordered by

@@ -2,9 +2,10 @@ package graft.rollup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.core.OracleParity
-import graft.query.QueryEngine
+import graft.query.{Bound, QueryEngine}
 
 /** Pre-aggregated rollup tables + partial→final merge — the Spark-native
   * form of the reference's matrix pipeline (1-min/1-h InfluxDB continuous
@@ -350,12 +351,13 @@ object Rollup {
       smokeNearestRank: Boolean = false): DataFrame = {
     val singleBin = binsize <= 0 || binsize >= (stop - start)
     val names = QueryEngine.outputNames(aggs, Nil)
+    def bound(v: Long) = Bound.long(tier, "binstart", v)
     val windowed = QueryEngine.attachLabels(
-      tier.filter(col("binstart") >= start && col("binstart") < stop), labels)
+      tier.filter(col("binstart") >= bound(start) && col("binstart") < bound(stop)), labels)
     // fold key: the label alone (matrix) or label × requested bin (A8 grid)
     val base =
       if (singleBin) windowed
-      else windowed.withColumn("__reqbin", col("binstart") - (col("binstart") % binsize))
+      else windowed.withColumn("__reqbin", col("binstart") - (col("binstart") % bound(binsize)))
     val keys =
       if (singleBin) Seq(QueryEngine.LabelCol)
       else Seq(QueryEngine.LabelCol, "__reqbin")
@@ -469,7 +471,8 @@ object Rollup {
       out = out.withColumn(out0, when(size(packedNonNull) > 0, packedNonNull))
     }
     out
-      .withColumn("binstart", if (singleBin) lit(start) else col("__reqbin"))
+      .withColumn("binstart",
+        if (singleBin) Bound.long(start, LongType) else col("__reqbin"))
       .select((Seq(QueryEngine.LabelCol, "binstart") ++ names ++
         Seq("timestamp") ++ (if (singleBin) Seq("min_timestamp") else Nil))
         .map(col): _*)

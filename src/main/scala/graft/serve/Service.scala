@@ -20,11 +20,17 @@ import graft.schema.{Collections, CollectionSpec}
   * (version/type/length header + zlib-compressed history bodies,
   * exporter.py:516-586) with JSON bodies — pickle is Python-VM-specific;
   * the deviation is documented in Wire's scaladoc.
+  *
+  * Compiled once per request shape: window bounds, binsize and stream ids
+  * reach the generated code as bound parameters (`graft.query.Bound`), so
+  * a request that differs from an earlier one only in those values reuses
+  * its compiled classes instead of paying a Janino compile.
   */
 object Service {
   val StreamsPageSize = 1000
   val HistoryChunkRows = 10000
   val MaxCancelFires = 30
+  val MaxRawSchemas = 1024
 
   final case class StreamsReply(rows: Seq[Row], more: Boolean)
   final case class HistoryChunk(label: String, rows: Seq[Row], more: Boolean, freq: Long)
@@ -209,12 +215,21 @@ final class Service(
       columns: Seq[String],
       start: Long,
       stop: Long): Iterator[HistoryChunk] = {
-    val result = QueryEngine
+    val result = historyFrame(collection, labels, columns, start, stop)
+    withCancellationIt("history")(g => chunked(result, binsize = 0, g))
+  }
+
+  /** The raw history plan, ordered by (label, timestamp). */
+  private[graft] def historyFrame(
+      collection: String,
+      labels: Map[String, Seq[Long]],
+      columns: Seq[String],
+      start: Long,
+      stop: Long): DataFrame =
+    QueryEngine
       .selectData(data(collection), labels, columns, start, stop)
       .withColumn("binstart", col("timestamp"))
       .orderBy(QueryEngine.LabelCol, "timestamp")
-    withCancellationIt("history")(g => chunked(result, binsize = 0, g))
-  }
 
   /** NNTSC_AGGREGATE (dbselect.py:208-387). */
   def aggregate(
@@ -271,10 +286,6 @@ final class Service(
       binsize: Long,
       groupcols: Seq[String] = Nil): DataFrame = {
     val cfg = rollups.get(collection)
-    val src =
-      cfg.fold(data(collection))(_ => data(collection).filter(col("timestamp") < stop))
-    val raw = QueryEngine.selectAggregatedData(
-      src, labels, aggs, start, stop, binsize, groupcols)
     val singleBin = binsize <= 0 || binsize >= (stop - start)
     val tiered =
       for {
@@ -290,9 +301,47 @@ final class Service(
           labels, aggs, start, stop, binsize, primaryCol = c.valueCol,
           sparseClamp = c.smokeSparseClamp,
           smokeNearestRank = c.smokeNearestRank)
-        t.select(raw.schema.fields.toSeq.map(f => t(f.name).cast(f.dataType).as(f.name)): _*)
+        asRaw(t, collection, aggs, singleBin)
       }
-    tiered.getOrElse(raw)
+    tiered.getOrElse {
+      val src = cfg.fold(data(collection))(_ => beforeStop(collection, stop))
+      QueryEngine.selectAggregatedData(src, labels, aggs, start, stop, binsize, groupcols)
+    }
+  }
+
+  /** The raw data of `collection` with `timestamp < stop`, the half-open
+    * window's pre-filter (`stop` a bound parameter, see QueryEngine).
+    */
+  private def beforeStop(collection: String, stop: Long): DataFrame = {
+    val raw = data(collection)
+    raw.filter(col("timestamp") < graft.query.Bound.long(raw, "timestamp", stop))
+  }
+
+  // (collection, aggs, single bin) → the raw plan's reply schema; see asRaw
+  private val rawSchemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[AggSpec], Boolean), StructType]()
+
+  /** A tier-served reply cast to the raw plan's schema, so callers cannot
+    * tell which path served them. That schema depends only on the data's
+    * schema, the aggregates and whether the reply is one bin, so it is
+    * worked out once per such key from the raw plan over an empty frame
+    * with the data's schema; no request analyses a plan over the data
+    * itself to learn it. The map is cleared if clients send more than
+    * `MaxRawSchemas` distinct aggregate lists.
+    */
+  private def asRaw(
+      tiered: DataFrame,
+      collection: String,
+      aggs: Seq[AggSpec],
+      singleBin: Boolean): DataFrame = {
+    if (rawSchemas.size > MaxRawSchemas) rawSchemas.clear()
+    val schema = rawSchemas.computeIfAbsent((collection, aggs, singleBin), _ => {
+      val empty =
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), data(collection).schema)
+      QueryEngine.selectAggregatedData(
+        empty, Map("" -> Seq(0L)), aggs, 0L, 2L, binsize = if (singleBin) 0L else 1L).schema
+    })
+    tiered.select(schema.fields.toSeq.map(f => tiered(f.name).cast(f.dataType).as(f.name)): _*)
   }
 
   /** One aggregate answerable from tier partials: a stat over a carried
@@ -354,8 +403,6 @@ final class Service(
       aggs: Seq[AggSpec],
       start: Long,
       stop: Long): DataFrame = {
-    val raw = QueryEngine.selectMatrixData(
-      data(collection).filter(col("timestamp") < stop), labels, aggs, start, stop)
     val tiered =
       for {
         cfg <- rollups.get(collection)
@@ -368,9 +415,10 @@ final class Service(
           labels, aggs, start, stop, primaryCol = cfg.valueCol,
           sparseClamp = cfg.smokeSparseClamp,
           smokeNearestRank = cfg.smokeNearestRank)
-        m.select(raw.schema.fields.toSeq.map(f => m(f.name).cast(f.dataType).as(f.name)): _*)
+        asRaw(m, collection, aggs, singleBin = true)
       }
-    tiered.getOrElse(raw)
+    tiered.getOrElse(
+      QueryEngine.selectMatrixData(beforeStop(collection, stop), labels, aggs, start, stop))
   }
 
   /** Iterator-returning ops (chunked history): the timer must outlive the

@@ -468,6 +468,22 @@ object PlanAudit {
         plan(routedMatrix),
         mustContain = Seq("t3600"),
         mustNot = Seq("events.parquet"))
+      //     the routed window stays pushed into the tier scan: its bounds
+      //     are bound parameters of the generated code (graft.query.Bound),
+      //     which must keep them visible to parquet pushdown. The plan is
+      //     printed with a long metadata limit so the whole PushedFilters
+      //     list shows.
+      val fullKey = "spark.sql.maxMetadataStringLength"
+      spark.conf.set(fullKey, "100000")
+      val routedScan =
+        try plan(tierSvc.matrixFrame(
+          "ev", labels, Seq(AggSpec("value", "avg")),
+          1704067200L, 1704067200L + 14 * 86400))
+        finally spark.conf.unset(fullKey)
+      check("matrix serve: tier window pushed into the tier scan",
+        routedScan.linesIterator.filter(_.contains("PushedFilters:"))
+          .map(l => l.substring(l.indexOf("PushedFilters:"))).mkString("\n"),
+        mustContain = Seq("GreaterThanOrEqual(binstart,", "LessThan(binstart,"))
 
       //     multi-column + mode variant: a second stat column and a `most`
       //     agg must ALSO route through the tier (the reference's CQs carry
