@@ -95,8 +95,10 @@ object QueryEngine {
     else col("timestamp") - (col("timestamp") % Bound.long(binsize, LongType))
 
   /** Raw history: sanitised projection with forced columns
-    * (dbselect.py:440-487) + time/stream predicates, ordered by
-    * (label, timestamp) like the reference's history emitter.
+    * (dbselect.py:440-487) + time/stream predicates. The rows come in no
+    * particular order; the serve path orders them by (label, timestamp),
+    * as the reference's history emitter does, without a global sort
+    * (`Service.historyFrame`).
     */
   def selectData(
       data: DataFrame,
@@ -157,8 +159,9 @@ object QueryEngine {
     }
 
     // ordered=false skips the W2 presentation sort for callers that
-    // immediately re-partition (frequency inference's per-label window) —
-    // the range exchange would be pure waste in their plans
+    // immediately re-partition (frequency inference's per-label window) or
+    // order the result themselves (the serve path's single sorted
+    // partition) — the range exchange would be pure waste in their plans
     if (ordered) out.orderBy((keys :+ "timestamp").map(col): _*) else out
   }
 

@@ -62,8 +62,11 @@ object Prefetch {
     * partition-job stream; distributed compute is 3.7 s). With window
     * k > 1 the pump fetches k partitions CONCURRENTLY (one runJob per
     * pool thread, EncodePipeline-ordered) and emits them in partition
-    * order — which IS row order, because a global sort range-partitions:
-    * every row of partition i precedes every row of partition i+1.
+    * order — which IS row order for every ordered serve result, whose
+    * plans put every row of partition i before every row of partition
+    * i+1: raw history routes each label's rows to one partition, in
+    * label order, and sorts within each (`Service.historyFrame`);
+    * aggregates are one sorted partition.
     * Output is row-identical to the serial drain (spec-pinned).
     *
     * Memory: at most window+1 partition results held on the driver

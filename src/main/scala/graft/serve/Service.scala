@@ -1,10 +1,13 @@
 package graft.serve
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.DirectShufflePartitionID
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.catalog.Catalog
+import graft.functions.ColumnBridge
 import graft.query.{AggSpec, Frequency, QueryEngine}
 import graft.schema.{Collections, CollectionSpec}
 
@@ -219,17 +222,54 @@ final class Service(
     withCancellationIt("history")(g => chunked(result, binsize = 0, g))
   }
 
-  /** The raw history plan, ordered by (label, timestamp). */
+  /** The raw history plan: its partitions, read in order, hold the rows in
+    * (label, timestamp) order, with no range sort.
+    *
+    * A global `orderBy` samples the whole filtered table in a job of its
+    * own to find range bounds. The request already names its labels, so
+    * the bounds are known up front: each row goes to its label's
+    * partition (`historyRoute`), and a sort within each partition
+    * finishes the order. The pump drains partitions in order
+    * (`Prefetch.rows`), so the chunks come out label by label, each in
+    * time order.
+    *
+    * The exchange names no partition count (the session's
+    * `spark.sql.shuffle.partitions` applies), so AQE may merge adjacent
+    * partitions, which keeps the order: a small history drains in one or
+    * two result partitions at any core count. A request runs the scan's
+    * map stage and one job per result partition after that merge.
+    */
   private[graft] def historyFrame(
       collection: String,
       labels: Map[String, Seq[Long]],
       columns: Seq[String],
       start: Long,
-      stop: Long): DataFrame =
+      stop: Long): DataFrame = {
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     QueryEngine
       .selectData(data(collection), labels, columns, start, stop)
       .withColumn("binstart", col("timestamp"))
-      .orderBy(QueryEngine.LabelCol, "timestamp")
+      .repartition(historyRoute(labels.keys.toSeq, parts))
+      .sortWithinPartitions(QueryEngine.LabelCol, "timestamp")
+  }
+
+  /** A history row's partition among `parts`: `rank * parts / labels`,
+    * non-decreasing in label order, so every label's rows share one
+    * partition and labels spread evenly over the partitions.
+    *
+    * Labels are ranked in Spark's string order (UTF-8 bytes, the order
+    * the sort within a partition uses; Scala's UTF-16 order differs for
+    * characters beyond the BMP). The label → partition map is a literal
+    * the generated code reads by reference, so the expression has one
+    * shape for every label count and a request of any size reuses the
+    * compiled code of the first.
+    */
+  private def historyRoute(labels: Seq[String], parts: Int): Column = {
+    val partition = labels.map(UTF8String.fromString).sorted.zipWithIndex
+      .map { case (l, rank) => l.toString -> (rank.toLong * parts / labels.size).toInt }.toMap
+    ColumnBridge.toColumn(new DirectShufflePartitionID(ColumnBridge.toExpression(
+      element_at(typedLit(partition), col(QueryEngine.LabelCol)))))
+  }
 
   /** NNTSC_AGGREGATE (dbselect.py:208-387). */
   def aggregate(
@@ -305,9 +345,24 @@ final class Service(
       }
     tiered.getOrElse {
       val src = cfg.fold(data(collection))(_ => beforeStop(collection, stop))
-      QueryEngine.selectAggregatedData(src, labels, aggs, start, stop, binsize, groupcols)
+      sortedOnePartition(
+        QueryEngine.selectAggregatedData(
+          src, labels, aggs, start, stop, binsize, groupcols, ordered = false),
+        groupcols)
     }
   }
+
+  /** A raw aggregate as one partition sorted by (label, groupcols…,
+    * binstart, timestamp), the order `selectAggregatedData` presents,
+    * ended like the tier fold (`Rollup.aggregatedFromTier`): the result
+    * holds at most one row per label, group and bin, all drained by one
+    * reply thread anyway, so a range sort's sampling job and exchange
+    * buy nothing. A raw request of stat aggregates runs 2 Spark jobs:
+    * the scan with its partial aggregate, and the result.
+    */
+  private def sortedOnePartition(agg: DataFrame, groupcols: Seq[String]): DataFrame =
+    agg.coalesce(1).sortWithinPartitions(
+      (Seq(QueryEngine.LabelCol) ++ groupcols ++ Seq("binstart", "timestamp")).map(col): _*)
 
   /** The raw data of `collection` with `timestamp < stop`, the half-open
     * window's pre-filter (`stop` a bound parameter, see QueryEngine).
@@ -417,8 +472,10 @@ final class Service(
           smokeNearestRank = cfg.smokeNearestRank)
         asRaw(m, collection, aggs, singleBin = true)
       }
-    tiered.getOrElse(
-      QueryEngine.selectMatrixData(beforeStop(collection, stop), labels, aggs, start, stop))
+    tiered.getOrElse(sortedOnePartition(
+      QueryEngine.selectAggregatedData(
+        beforeStop(collection, stop), labels, aggs, start, stop, binsize = 0, ordered = false),
+      Nil))
   }
 
   /** Iterator-returning ops (chunked history): the timer must outlive the

@@ -119,10 +119,13 @@ object PlanAudit {
       // 5. documented caveat: the events adapter derives epoch seconds, so
       //    its time filter is NOT pushable (engine tables store epoch-s
       //    longs physically — case 4 — so this only affects the test corpus
-      //    adapter)
+      //    adapter). The scan still lists the derivation's IsNotNull(ts);
+      //    a comparison on ts would mean the bounds do reach the reader.
       val adapterPlan = plan(QueryEngine.filterTime(evAll, 1L, 2L))
-      println(s"AUDIT info adapter pushdown (expected absent): " +
-        (if (adapterPlan.contains("PushedFilters: []")) "absent as documented" else "present"))
+      val pushed = """PushedFilters: \[([^\]]*)\]""".r
+        .findFirstMatchIn(adapterPlan).map(_.group(1)).getOrElse("?")
+      println(s"AUDIT info adapter pushed filters: [$pushed]; time bounds " +
+        (if (pushed.contains("(ts,")) "pushed" else "not pushed, as documented"))
     }
 
     guarded("signature paths") {
@@ -546,6 +549,29 @@ object PlanAudit {
         plan(routedBinned),
         mustContain = Seq("t3600s"),
         mustNot = Seq("events.parquet", "ntile", "Generate"))
+
+      //     raw serving orders replies without a range sort: raw history
+      //     routes rows to partitions by the request's labels, and the raw
+      //     aggregate fallback (a window off the tier's edges) ends as one
+      //     sorted partition. A rangepartitioning exchange in either would
+      //     bring back the sampling job that re-scans the filtered table.
+      //     The history exchange must stay REPARTITION_BY_COL (no fixed
+      //     count), the origin AQE merges adjacent partitions of: a fixed
+      //     count runs one job per shuffle partition on every request.
+      val offEdge = 1704067200L + 30
+      val rawHistory = tierSvc.historyFrame(
+        "ev", labels, Seq("value"), offEdge, offEdge + 14 * 86400)
+      check("raw history: rows routed by label, no range sort",
+        plan(rawHistory),
+        mustContain = Seq("In(user_id,", "shufflepartitionidpassthrough", "REPARTITION_BY_COL"),
+        mustNot = Seq("rangepartitioning"))
+      val rawAgg = tierSvc.aggFrame(
+        "ev", labels, Seq(AggSpec("value", "avg"), AggSpec("value", "max")),
+        offEdge, offEdge + 14 * 86400, binsize = 3600)
+      check("raw aggregate fallback: one sorted partition, no range sort",
+        plan(rawAgg),
+        mustContain = Seq("In(user_id,", "Coalesce 1"),
+        mustNot = Seq("t3600", "rangepartitioning"))
 
       //     mode-map fold: the tier-read mode merge must ride the single
       //     aggregation pass — exactly one shuffle (the group-by), no

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, GraftShim, Row}
 import org.apache.spark.sql.catalyst.expressions.{InSet, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 
 import graft.query.{AggSpec, BoundInSet, BoundLiteral, QueryEngine}
 import graft.serve.Service
@@ -120,6 +121,23 @@ class ServeCodegenSpec extends SparkSpec {
     reusesWarm("500-id matrix", matrix(few, t0, t0 + 3600), matrix(many, t0, t0 + 3600))
     val got = svc.matrix("c", many, aggs, t0, t0 + 3600)
     assert(got.map(_.getString(0)).toSet === many.keySet)
+  }
+
+  test("raw history from fewer labels than shuffle partitions to more: the same compiled plan") {
+    // 1 label routes to partition 0; 9 labels at 4 partitions spread over all
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+    val one = Map("x" -> Seq(3L))
+    val nine = (0 until 9).map(i => s"l$i" -> Seq(i * 2L + 40, i * 2L + 41)).toMap
+    // the partition-id expression, values blanked: the compiled classes
+    // of both sides may already be cached by earlier tests, so the shape
+    // is compared directly as well
+    def routeShape(l: Map[String, Seq[Long]], start: Long, stop: Long): String =
+      svc.historyFrame("c", l, columns, start, stop).queryExecution.optimizedPlan
+        .collectFirst { case r: RepartitionByExpression => r.partitionExpressions }.get
+        .map(_.transform { case v: Literal => Literal.default(v.dataType) })
+        .mkString.replaceAll("#[0-9]+", "")
+    assert(routeShape(one, t0, t0 + 3600) === routeShape(nine, t0 + 300, t0 + 7200))
+    reusesWarm("1 → 9 label history", history(one, t0, t0 + 3600), history(nine, t0 + 300, t0 + 7200))
   }
 
   test("a stream under two labels (broadcast-join branch): compiles nothing, literal-built rows") {

@@ -2,7 +2,7 @@ package graft
 
 import graft.core.Tables
 import graft.ingest.PathIntern
-import graft.query.AggSpec
+import graft.query.{AggSpec, QueryEngine}
 import graft.rollup.Rollup
 import graft.serve.Service
 
@@ -704,6 +704,14 @@ class ServiceSpec extends SparkSpec {
     * job group; a marker job submitted after them proves the (FIFO)
     * listener bus has delivered every earlier job start.
     */
+  /** `body` with session confs set, each restored afterwards. */
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val was = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally was.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   private def jobsRun(body: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
@@ -826,5 +834,111 @@ class ServiceSpec extends SparkSpec {
       assert(chunks.map(_.label) === lbl.keys.toSeq.sorted, "one contiguous run per label")
       assert(chunks.flatMap(c => c.rows.map(r => (c.label, r.getAs[Long]("binstart")))) === got)
     } finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  // a parquet data table of int stream ids (FilePoller's shape): streams
+  // 0-11 with 200 rows at 60 s, stream 20 with 12 000 rows at 10 s (more
+  // than one history chunk), timestamps unique within every label below;
+  // and a 60 s tier of the same rows
+  private val rt0 = 1704067200L // hour-aligned
+  private lazy val rawStore: (org.apache.spark.sql.DataFrame, String) = {
+    val dir = java.nio.file.Files.createTempDirectory("graftraw").toString
+    val ev = ((0 until 12).flatMap(s => (0 until 200).map(i => (s, rt0 + i * 60L + s, i * 0.5 + s))) ++
+      (0 until 12000).map(i => (20, rt0 + i * 10L, (i % 13).toDouble)))
+      .toDF("stream_id", "timestamp", "value")
+    ev.write.parquet(s"$dir/data")
+    val data = spark.read.parquet(s"$dir/data")
+    graft.streaming.RollupStream.appendPartials(data, 60, "value", s"$dir/t60", epoch = 0L)
+    (data, s"$dir/t60")
+  }
+  private lazy val rawSvc = new Service(
+    spark,
+    data = Map("c" -> rawStore._1),
+    streams = Map.empty,
+    rollups = Map("c" -> Service.RollupTiers("value", Map(60L -> rawStore._2))))
+
+  test("raw history runs no range-sample job; raw aggregate and matrix fallbacks run 2 jobs") {
+    import org.apache.spark.sql.functions.col
+    val lbl = Map("x" -> Seq(0L, 1L), "y" -> Seq(2L))
+    val aggs = Seq(AggSpec("value", "avg"), AggSpec("value", "max"))
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def planOf(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString
+    // history: the scan's map stage, then one job per result partition;
+    // AQE merges a small history's partitions into one at any partition
+    // count, so the job count does not grow with the cores
+    for (n <- Seq(parts, 16)) withConf("spark.sql.shuffle.partitions" -> n.toString) {
+      val history = rawSvc.historyFrame("c", lbl, Seq("value"), rt0, rt0 + 12000)
+      assert(!planOf(history).contains("rangepartitioning"), planOf(history))
+      assert(jobsRun(assert(rawSvc.history("c", lbl, Seq("value"), rt0, rt0 + 12000)
+        .flatMap(_.rows).size === 600)) === 2, s"at $n shuffle partitions")
+    }
+    // windows off the 60 s tier's edges fall back to the raw table
+    val (start, stop) = (rt0 + 30, rt0 + 12030)
+    val agg = rawSvc.aggFrame("c", lbl, aggs, start, stop, 600)
+    val matrix = rawSvc.matrixFrame("c", lbl, aggs, start, stop)
+    for (df <- Seq(agg, matrix)) {
+      assert(!planOf(df).contains(rawStore._2), "raw fallback")
+      assert(!planOf(df).contains("rangepartitioning"), planOf(df))
+    }
+    // the same rows in the same order as the range-sorted plan
+    val before = rawStore._1.filter(col("timestamp") < stop)
+    val wantAgg = QueryEngine.selectAggregatedData(before, lbl, aggs, start, stop, 600).collect().toSeq
+    val wantMatrix = QueryEngine.selectMatrixData(before, lbl, aggs, start, stop).collect().toSeq
+    assert(wantAgg.size === 40)
+    assert(jobsRun(assert(
+      rawSvc.aggregate("c", lbl, aggs, start, stop, 600).flatMap(_.rows).toSeq === wantAgg)) === 2)
+    assert(jobsRun(assert(rawSvc.matrix("c", lbl, aggs, start, stop) === wantMatrix)) === 2)
+  }
+
+  test("raw history: the same rows and chunks as the range-sorted plan, for every label shape") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    // the plan history ran before label routing: a global (label, timestamp) sort
+    def rangeSorted(labels: Map[String, Seq[Long]], start: Long, stop: Long): Seq[Row] =
+      QueryEngine.selectData(rawStore._1, labels, Seq("value"), start, stop)
+        .withColumn("binstart", col("timestamp"))
+        .orderBy(QueryEngine.LabelCol, "timestamp")
+        .collect().toSeq
+    // one run per label, cut every HistoryChunkRows rows; all but a run's
+    // last chunk say `more`
+    def chunksOf(rows: Seq[Row]): Seq[(String, Seq[Seq[Any]], Boolean)] = {
+      val runs = rows.foldLeft(Vector.empty[(String, Vector[Row])]) { (acc, r) =>
+        val l = r.getString(0)
+        if (acc.nonEmpty && acc.last._1 == l) acc.init :+ (l -> (acc.last._2 :+ r))
+        else acc :+ (l -> Vector(r))
+      }
+      runs.flatMap { case (l, rs) =>
+        val cut = rs.grouped(Service.HistoryChunkRows).toSeq
+        cut.zipWithIndex.map { case (c, i) => (l, c.map(_.toSeq), i < cut.size - 1) }
+      }
+    }
+    // Scala's UTF-16 order and Spark's UTF-8 order disagree on these two
+    assert("\uD83D\uDE00" < "\uFF61")
+    val t1 = rt0 + 12000
+    val twelve = (0 until 12).map(i => s"l$i" -> Seq(i.toLong)).toMap
+    val cases = Seq(
+      ("empty label map", Map.empty[String, Seq[Long]], rt0, t1),
+      ("a label with no rows", Map("none" -> Seq(99L), "a" -> Seq(0L, 1L)), rt0, t1),
+      ("one label, two chunks", Map("big" -> Seq(20L)), rt0, rt0 + 120000),
+      ("more labels than partitions", twelve, rt0, t1),
+      ("a stream under two labels", Map("x" -> Seq(1L, 2L), "y" -> Seq(2L, 3L)), rt0 + 600, t1),
+      ("UTF-16 and UTF-8 orders differ", Map("\uFF61" -> Seq(4L), "\uD83D\uDE00" -> Seq(5L)), rt0, t1),
+      ("stop = Long.MaxValue", Map("a" -> Seq(0L, 20L), "b" -> Seq(6L)), rt0, Long.MaxValue))
+    // partitions as planned, and adjacent ones merged by AQE at the
+    // serving sessions' 16k floor: 12 labels drain in 4, then in 2
+    val merges = Seq(
+      Seq("spark.sql.adaptive.coalescePartitions.enabled" -> "false"),
+      Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16k"))
+    for ((conf, n) <- merges.zip(Seq(4, 2))) withConf(conf: _*) {
+      val drained = rawSvc.historyFrame("c", twelve, Seq("value"), rt0, t1).queryExecution.toRdd
+      assert(drained.getNumPartitions === n, conf)
+    }
+    for (conf <- merges; (what, labels, start, stop) <- cases) withConf(conf: _*) {
+      val got = rawSvc.history("c", labels, Seq("value"), start, stop).toSeq
+        .map(c => (c.label, c.rows.map(_.toSeq), c.more))
+      val want = chunksOf(rangeSorted(labels, start, stop))
+      assert(got === want, s"$what, $conf")
+      assert(want.nonEmpty === labels.nonEmpty, what)
+    }
   }
 }
