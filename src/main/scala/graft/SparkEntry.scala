@@ -519,7 +519,7 @@ object SparkEntry {
           AggSpec("value", "avg"), AggSpec("value", "count"),
           AggSpec("value", "smoke")),
         Start, Stop, binsize = 21600, primaryCol = "value",
-        sparseClamp = true, smokeNearestRank = true), "value_smoke")
+        sparseClamp = true), "value_smoke")
     }),
 
     // ---- REAL WordPiece encode (the BERT tokenizer's apply): greedy

@@ -143,8 +143,8 @@ object Bpe {
     * reachable — a 32k-merge table trained on the ~58k-word Zipf corpus
     * diverges on exactly ONE word (a 5-run of 'a'; BpeSpec pins the set
     * to that word and the class shape). Gates stay on the replay form;
-    * token COUNTS typically agree even where grouping differs (the r15
-    * ProfScale parity held on this same corpus).
+    * token COUNTS typically agree even where grouping differs (ROUND_NOTES,
+    * round 16, "BPE production-scale divergence").
     */
   def encodeWordRanked(
       word: String, ranks: java.util.HashMap[String, Integer]): Array[String] = {

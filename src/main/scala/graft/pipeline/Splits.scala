@@ -667,11 +667,6 @@ object Splits {
     capWithReference(df, idCol, groupCol, k,
       substring(md5(concat(lit(salt), col(idCol).cast("string"))), 1, 15))
 
-  /** xxhash64 reference twin (no pre-cap) for the ProfScale skew A/B. */
-  private[graft] def capPerGroupReference(
-      df: DataFrame, idCol: String, groupCol: String, k: Int, salt: String): DataFrame =
-    capWithReference(df, idCol, groupCol, k, hex60(salt, col(idCol)))
-
 
   // ---- deterministic replication (UP-sampling) -------------------------
 

@@ -289,10 +289,9 @@ object Rollup {
       start: Long,
       stop: Long,
       primaryCol: String = "",
-      sparseClamp: Boolean = false,
-      smokeNearestRank: Boolean = false): DataFrame =
+      sparseClamp: Boolean = false): DataFrame =
     aggregatedFromTier(tier, labels, aggs, start, stop, binsize = 0, primaryCol,
-      sparseClamp, smokeNearestRank)
+      sparseClamp)
 
   /** The reference's sparse-bin smokearray clamp (influx.py:694-712): the
     * percentile positions (in percent, multiples of 5) a bin with `n`
@@ -344,11 +343,7 @@ object Rollup {
       stop: Long,
       binsize: Long,
       primaryCol: String = "",
-      sparseClamp: Boolean = false,
-      // set when serving a buildMulti(smokeNearestRank = true) tier: its
-      // sparse bins leave low-percentile slots NULL, so the smoke merge
-      // must weight each slot by Σ(cnt | slot populated), not Σcnt
-      smokeNearestRank: Boolean = false): DataFrame = {
+      sparseClamp: Boolean = false): DataFrame = {
     val singleBin = binsize <= 0 || binsize >= (stop - start)
     val names = QueryEngine.outputNames(aggs, Nil)
     def bound(v: Long) = Bound.long(tier, "binstart", v)
@@ -386,13 +381,10 @@ object Rollup {
     }
     // nearest-rank is a property of the TIER, detected per smoke column
     // from its schema (the build writes smokeNName counts only in that
-    // mode): a caller flag alone was misconfigurable both ways — false on
-    // a nearest-rank tier silently re-biased sparse-window percentiles
-    // (the shared-denominator bug), true on an interpolated tier failed
-    // at analysis. The parameter remains as an explicit override for
-    // tiers whose schema cannot be inspected upstream.
-    def nrCol(c: String): Boolean =
-      smokeNearestRank || tier.columns.contains(smokeNName(c))
+    // mode): its sparse bins leave low-percentile slots NULL, so the smoke
+    // merge weights each slot by Σ(cnt | slot populated), not Σcnt. Read
+    // from the tier, the mode cannot disagree with how the tier was built.
+    def nrCol(c: String): Boolean = tier.columns.contains(smokeNName(c))
     val stats = aggs.zip(names).filter { case (a, _) => a.func != "most" && a.func != "smoke" }
     val modes = aggs.zip(names).filter { case (a, _) => a.func == "most" }
     val smokes = aggs.zip(names).filter { case (a, _) => a.func == "smoke" }

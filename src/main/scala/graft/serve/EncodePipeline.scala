@@ -39,8 +39,7 @@ object EncodePipeline {
   }
 
   /** `it.map(f)` with `f` evaluated `parallelism`-wide, results in input
-    * order. `parallelism <= 1` degrades to a plain serial map (the A/B's
-    * off arm and the conservative default for tiny results). Always
+    * order. `parallelism <= 1` degrades to a plain serial map. Always
     * close() in a finally — a no-op after exhaustion or failure, the
     * only reclaim path after mid-stream abandonment.
     */
@@ -66,9 +65,10 @@ object EncodePipeline {
     * fat region (estimates still reflect the healthy sizes), bounded by
     * budget + (parallelism + 1)·(largest single result), converging to
     * ~1 result in flight once one fat completion updates the estimate
-    * (spec-pinned in PrefetchSpec; ProfScale A/B in ROUND_NOTES shows
-    * the healthy path keeps its pump speedup — estimate 0 until the
-    * first completion, so warm-up admission is unchanged). Ordering,
+    * (spec-pinned in PrefetchSpec; the sf1 A/B in ROUND_NOTES, round 18,
+    * item 9 "Pump submission-time estimate", shows the healthy path
+    * keeps its pump speedup — estimate 0 until the first completion, so
+    * warm-up admission is unchanged). Ordering,
     * failure, and close() semantics are exactly [[mapOrdered]]'s.
     */
   def mapOrderedBudgeted[A, B](

@@ -65,11 +65,7 @@ object Service {
       // opt-in byte-parity with the reference's sparse-bin smokearray
       // packing (influx.py:694-712): windows with < 20 samples emit the
       // 100/n-stepped percentile subset instead of the full 19-slot grid
-      smokeSparseClamp: Boolean = false,
-      // set when the tier was built with buildMulti(smokeNearestRank =
-      // true) — the serve-side smoke merge then weights each grid slot by
-      // the counts of the bins that actually populate it
-      smokeNearestRank: Boolean = false) {
+      smokeSparseClamp: Boolean = false) {
     def statCols: Set[String] = (valueCol +: extraCols).toSet
   }
 
@@ -217,7 +213,7 @@ final class Service(
       labels: Map[String, Seq[Long]],
       columns: Seq[String],
       start: Long,
-      stop: Long): Iterator[HistoryChunk] = {
+      stop: Long): Iterator[HistoryChunk] with AutoCloseable = {
     val result = historyFrame(collection, labels, columns, start, stop)
     withCancellationIt("history")(g => chunked(result, binsize = 0, g))
   }
@@ -279,7 +275,7 @@ final class Service(
       start: Long,
       stop: Long,
       binsize: Long,
-      groupcols: Seq[String] = Nil): Iterator[HistoryChunk] = {
+      groupcols: Seq[String] = Nil): Iterator[HistoryChunk] with AutoCloseable = {
     val result = aggFrame(collection, labels, aggs, start, stop, binsize, groupcols)
     withCancellationIt("aggregate")(g => chunked(result, binsize, g))
   }
@@ -339,8 +335,7 @@ final class Service(
         val t = graft.rollup.Rollup.aggregatedFromTier(
           tierFrame(c.tiers(bin)),
           labels, aggs, start, stop, binsize, primaryCol = c.valueCol,
-          sparseClamp = c.smokeSparseClamp,
-          smokeNearestRank = c.smokeNearestRank)
+          sparseClamp = c.smokeSparseClamp)
         asRaw(t, collection, aggs, singleBin)
       }
     tiered.getOrElse {
@@ -468,8 +463,7 @@ final class Service(
         val m = graft.rollup.Rollup.matrixFromTier(
           tierFrame(cfg.tiers(bin)),
           labels, aggs, start, stop, primaryCol = cfg.valueCol,
-          sparseClamp = cfg.smokeSparseClamp,
-          smokeNearestRank = cfg.smokeNearestRank)
+          sparseClamp = cfg.smokeSparseClamp)
         asRaw(m, collection, aggs, singleBin = true)
       }
     tiered.getOrElse(sortedOnePartition(
@@ -479,13 +473,15 @@ final class Service(
   }
 
   /** Iterator-returning ops (chunked history): the timer must outlive the
-    * call — toLocalIterator submits its jobs lazily as the client drains
-    * chunks. Disarmed on exhaustion or error; a watchdog that has already
-    * fired `MaxCancelFires` times deschedules itself (the rogue jobs are
-    * long dead), so an abandoned iterator cannot leak a periodic task.
+    * call — the pump submits its jobs lazily as the client drains
+    * chunks. Disarmed on exhaustion, error or close; a watchdog that has
+    * already fired `MaxCancelFires` times deschedules itself (the rogue
+    * jobs are long dead), so an abandoned iterator cannot leak a periodic
+    * task.
     */
   private def withCancellationIt[T](op: String)(
-      make: Option[(String, String)] => Iterator[T]): Iterator[T] =
+      make: Option[(String, String)] => Iterator[T] with AutoCloseable)
+      : Iterator[T] with AutoCloseable =
     if (queryTimeoutSec <= 0) make(None)
     else {
       val sc = spark.sparkContext
@@ -507,6 +503,7 @@ final class Service(
           }
         },
         queryTimeoutSec, 1, java.util.concurrent.TimeUnit.SECONDS)
+      def disarm(): Unit = { done = true; timer.cancel(false) }
       def wrap[A](a: => A): A =
         try a
         catch {
@@ -514,28 +511,26 @@ final class Service(
           // kill surfaces as InterruptedException / IO error); other
           // failures keep their identity (see isInterruptLike)
           case e: Throwable if isCancellation(e) || (fired && isInterruptLike(e)) =>
-            done = true
-            timer.cancel(false)
+            disarm()
             throw new QueryCancelledException(op, e)
         }
       val inner = wrap(make(Some((group, desc))))
-      new Iterator[T] {
+      new Iterator[T] with AutoCloseable {
         // re-tag the consuming thread before EVERY draw: the job group is
         // a thread-local, so any other service call on this thread between
-        // draws overwrote it. With the prefetch pump, partition jobs are
-        // tagged on the pump's own thread (the group passed to `make`);
-        // this consumer-side retag still covers any job the plan submits
-        // lazily from THIS thread (first-draw materialization, fallback
-        // toLocalIterator when prefetch is disabled)
+        // draws overwrote it. Partition jobs are tagged on the pump's own
+        // thread (the group passed to `make`); this consumer-side retag
+        // still covers any job the plan submits lazily from THIS thread
         private def retag(): Unit =
           sc.setJobGroup(group, desc, interruptOnCancel = true)
         def hasNext: Boolean = wrap {
           retag()
           val h = inner.hasNext
-          if (!h) { done = true; timer.cancel(false) }
+          if (!h) disarm()
           h
         }
         def next(): T = wrap { retag(); inner.next() }
+        def close(): Unit = { disarm(); inner.close() }
       }
     }
 
@@ -545,14 +540,13 @@ final class Service(
 
   /** Chunk a labeled result into HistoryChunks: rows stream out via the
     * prefetch pump ([[Prefetch.rows]] — the named-cursor replacement,
-    * dbselect.py:64-76), which fetches result partitions
-    * `spark.graft.serve.pump.window`-wide (default 4) with ordered
-    * emission while the drain encodes — toLocalIterator's serial
-    * per-partition job stream was the measured drain floor at sf10
-    * (ProfScale `pumpfloor`); `spark.graft.serve.prefetch=false` falls
-    * back to plain toLocalIterator. Rows are flushed per label every
-    * HistoryChunkRows with `more=true` between flushes; each chunk
-    * carries the label's inferred frequency (W3).
+    * dbselect.py:64-76), which fetches result partitions 4-wide with
+    * ordered emission while the drain encodes — a serial per-partition
+    * job stream was the measured drain floor at sf10 (ROUND_NOTES,
+    * round 16, "Drain floor analysis → windowed partition pump"). Rows
+    * are flushed per label every HistoryChunkRows with `more=true`
+    * between flushes; each chunk carries the label's inferred frequency
+    * (W3). Closing the chunk iterator closes the pump.
     *
     * Frequency is computed DRIVER-SIDE from the rows already streaming
     * through this iterator (`Frequency.inferLocal` — bit-compatible with
@@ -567,21 +561,12 @@ final class Service(
   private def chunked(
       result: DataFrame,
       binsize: Long,
-      jobGroup: Option[(String, String)] = None): Iterator[HistoryChunk] = {
+      jobGroup: Option[(String, String)] = None): Iterator[HistoryChunk] with AutoCloseable = {
     val labelIdx = result.schema.fieldIndex(QueryEngine.LabelCol)
     val tsIdx = result.schema.fieldIndex("timestamp")
     val binIdx = result.schema.fieldIndex("binstart")
-    val prefetch = spark.conf.get("spark.graft.serve.prefetch", "true").toBoolean
-    new Iterator[HistoryChunk] {
-      private val rows: Iterator[Row] =
-        if (prefetch) Prefetch.rows(result, jobGroup)
-        else {
-          val it = result.toLocalIterator()
-          new Iterator[Row] {
-            def hasNext: Boolean = it.hasNext
-            def next(): Row = it.next()
-          }
-        }
+    new Iterator[HistoryChunk] with AutoCloseable {
+      private val rows = Prefetch.rows(result, jobGroup)
       private var pending: Option[Row] = None
       // per-label frequency state: prefix of (binstart, timestamp) pairs
       // (consecutive duplicate timestamps skipped; 201 distinct rows give
@@ -625,6 +610,7 @@ final class Service(
         }
         HistoryChunk(label, buf.result(), more, freq)
       }
+      def close(): Unit = rows.close()
     }
   }
 }

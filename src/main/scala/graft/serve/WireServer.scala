@@ -260,16 +260,15 @@ final class WireServer(
             // the backfill then covers everything up to the present
             val histStop = if (stop == 0) Long.MaxValue else stop
             val chunks = service.history(coll, labels, columns, start, histStop)
-            // frame encode (JSON/Arrow + compression) runs k chunks wide
+            // frame encode (JSON/Arrow + compression) runs 4 chunks wide
             // on a pool while this thread writes strictly in order — the
             // encode stage dominates the drain once the prefetch pump
-            // hides compute (ProfScale `encpool` A/B). The per-chunk
-            // lastHist max is computed inside the parallel stage (pure
-            // per-chunk) and folded here in input order, so the seam
-            // values are exactly the serial drain's
-            val encPool = service.spark.conf
-              .get("spark.graft.serve.encodepool", "4").toInt
-            val enc = EncodePipeline.mapOrdered(chunks, encPool) { c =>
+            // hides compute (sf10 backfill 24.5 → 16.1 s; ROUND_NOTES,
+            // round 16, "Drain floor analysis → windowed partition
+            // pump"). The per-chunk lastHist max is computed inside the
+            // parallel stage (pure per-chunk) and folded here in input
+            // order, so the seam values are exactly the serial drain's
+            val enc = EncodePipeline.mapOrdered(chunks, 4) { c =>
               var mx = Long.MinValue
               if (c.rows.nonEmpty) {
                 // one schema per chunk — resolve the index once, not per row
@@ -281,13 +280,15 @@ final class WireServer(
               (c.label, mx, historyBody(c, arrow, codec))
             }
             // close() in finally: if out.write throws on a client
-            // disconnect mid-backfill, the encode pool is reaped here
-            // instead of leaking `encPool` idle threads per aborted drain
+            // disconnect mid-backfill, the encode pool and the history's
+            // prefetch pump (its queued chunks and fetch window) are
+            // reaped here instead of parking until the pump's abandon
+            // timeout
             try enc.foreach { case (label, mx, frame) =>
               if (mx != Long.MinValue)
                 lastHist(label) = math.max(lastHist.getOrElse(label, Long.MinValue), mx)
               out.synchronized { out.write(frame); out.flush() }
-            } finally enc.close()
+            } finally { enc.close(); chunks.close() }
             // markers registered BEFORE the ack: once the client sees the
             // ack, batch commits are guaranteed to reach it. With a live
             // relay present the frames ride it — buffered until finish(),

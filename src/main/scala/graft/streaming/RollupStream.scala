@@ -3,19 +3,16 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.OracleParity
-
-/** Streaming rollup maintenance — the Spark-native form of the reference's
-  * InfluxDB continuous queries (X4, /root/reference/libnntsc/influx.py:183-195):
-  * 1-min bins recomputed every minute over a trailing 15 min, 1-h bins
-  * hourly over a trailing 3 h — i.e. bounded late-data tolerance via
-  * re-aggregation.
+/** Rollup tier maintenance — the Spark-native form of the reference's
+  * InfluxDB continuous queries (X4, libnntsc/influx.py:183-195),
+  * which recompute 1-min bins every minute over a trailing 15 min and
+  * 1-h bins hourly over a trailing 3 h.
   *
-  * Here: event-time tumbling windows with a watermark equal to the
-  * reference's recompute horizon (15 min short / 3 h long). Late rows inside
-  * the watermark update their bin; later rows are dropped from rollups
-  * (raw appends still accept them, matching the reference: history sees
-  * all data, rollups only what arrived within the horizon).
+  * Here each ingest micro-batch appends its own exact partials per
+  * (stream, bin) with [[appendPartials]], so there is no watermark and no
+  * recompute horizon: a late row lands another partial row in its bin,
+  * whenever it arrives. [[compact]] folds the accumulated partials back
+  * to one row per (stream, bin) between triggers.
   *
   * Partials kept are the exact-decimal set of `graft.rollup.Rollup.build`
   * (count, Σv, Σv², min, max), so merged results equal raw aggregation —
@@ -24,47 +21,12 @@ import graft.core.OracleParity
   */
 object RollupStream {
 
-  /** Attach to a streaming frame with (stream_id, timestamp epoch-s, value)
-    * and produce the streaming rollup aggregation. Caller writes it with
-    * outputMode("update") (bin rows re-emitted as late data arrives) or
-    * "append" (bin emitted once the watermark passes).
-    */
-  def rollup(events: DataFrame, binsize: Long, watermark: String, valueCol: String): DataFrame = {
-    val v = col(valueCol)
-    val d = OracleParity.dec(v)
-    events
-      .withColumn("__ts", timestamp_seconds(col("timestamp")))
-      .withWatermark("__ts", watermark)
-      .groupBy(
-        col("stream_id"),
-        window(col("__ts"), s"$binsize seconds").as("__w"))
-      .agg(
-        count(v).as("cnt"),
-        sum(d).as("s1"),
-        sum(d * d).as("s2"),
-        min(v).as("mn"),
-        max(v).as("mx"),
-        max("timestamp").as("ts"),
-        min("timestamp").as("tsn"))
-      .select(
-        col("stream_id"),
-        col("__w.start").cast("long").as("binstart"),
-        col("cnt"), col("s1"), col("s2"), col("mn"), col("mx"), col("ts"), col("tsn"))
-  }
-
-  /** The reference's two tiers (influx.py:183-195). */
-  def shortRollup(events: DataFrame, valueCol: String): DataFrame =
-    rollup(events, 60, "14 minutes", valueCol)
-  def longRollup(events: DataFrame, valueCol: String): DataFrame =
-    rollup(events, 3600, "2 hours", valueCol)
-
-  /** File-backed tier maintenance without watermark latency: each
-    * micro-batch appends ITS OWN exact partials per (stream, bin) under an
-    * `__epoch` partition (idempotent on replay, same mechanism as
-    * IngestStream) — a late row simply lands another partial row in its
-    * bin. The exact-partial set (cnt, Σv, Σv², min, max, ts) is closed
-    * under addition, so any number of partial rows per bin folds to the
-    * same numbers raw aggregation gives.
+  /** File-backed tier maintenance: each micro-batch appends ITS OWN exact
+    * partials per (stream, bin) under an `__epoch` partition (idempotent
+    * on replay, same mechanism as IngestStream) — a late row simply lands
+    * another partial row in its bin. The exact-partial set (cnt, Σv, Σv²,
+    * min, max, ts) is closed under addition, so any number of partial
+    * rows per bin folds to the same numbers raw aggregation gives.
     */
   def appendPartials(
       batch: DataFrame,
@@ -128,8 +90,9 @@ object RollupStream {
   /** Range count for a heap-bounded tier build, from corpus stats and
     * this JVM's heap. Capacity anchor: the measured sf100 point — a
     * 16-range build of a 95.6M-tier-row corpus completed under a 6 GiB
-    * heap where the single pass died (ProfScale `tierranged`), i.e.
-    * ~6M in-flight groups per 6 GiB WITH smoke grids. We size at 1M
+    * heap where the single pass died (ROUND_NOTES, round 12, VERDICT r11
+    * item 5 "Heap-bounded tier build"), i.e. ~6M in-flight groups per
+    * 6 GiB WITH smoke grids. We size at 1M
     * rows per GiB of heap (that point with no headroom eaten by the
     * caller's other state), using the event count as the upper bound on
     * tier rows (each event lands in exactly one (stream, bin) group).

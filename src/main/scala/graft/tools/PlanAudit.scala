@@ -605,7 +605,7 @@ object PlanAudit {
         nrTier, labels,
         Seq(AggSpec("value", "avg"), AggSpec("value", "smoke")),
         1704067200L, 1704067200L + 14 * 86400, binsize = 86400,
-        primaryCol = "value", sparseClamp = true, smokeNearestRank = true)
+        primaryCol = "value", sparseClamp = true)
       val nrPlan = plan(nrServe)
       check("nearest-rank fold: clamp + per-slot denominators, one agg pass",
         nrPlan,

@@ -80,7 +80,7 @@ object ProfOpt {
           Seq(AggSpec("value", "avg"), AggSpec("value", "count"),
             AggSpec("value", "smoke")),
           Start, Stop, binsize = 21600, primaryCol = "value",
-          sparseClamp = true, smokeNearestRank = true)))
+          sparseClamp = true)))
       tier600.unpersist()
       val tier3600 = Rollup.buildMulti(ev, 3600, Seq("value"), Seq("event_type"), Seq("value"))
       tier3600.persist().count()
@@ -182,7 +182,7 @@ object ProfOpt {
         Seq(AggSpec("value", "avg"), AggSpec("value", "count"),
           AggSpec("value", "smoke")),
         Start, Stop, binsize = 21600, primaryCol = "value",
-        sparseClamp = true, smokeNearestRank = true)
+        sparseClamp = true)
       fold.collect() // materialize THIS QueryExecution so AQE finalizes
       println("=== final plan operators ===")
       println(fold.queryExecution.executedPlan.toString.linesIterator

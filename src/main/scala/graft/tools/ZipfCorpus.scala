@@ -7,9 +7,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * corpus-trained merge table saturates at a few dozen merges and the
   * per-thread segmentation cache absorbs everything — the honest regime
   * for a 16k-64k-merge tokenizer is tens of thousands of DISTINCT words
-  * where cache misses dominate. This builder is shared by the ProfScale
-  * `bpeprod` arm (throughput measurement) and BpeSpec's production-scale
-  * divergence pin (ranked-vs-replay equality at 32k merges), so both run
+  * where cache misses dominate. This builder defines the corpus of the
+  * production-scale throughput measurement (ROUND_NOTES, round 15
+  * certification record, "BPE production measurements") and of BpeSpec's
+  * divergence pin (ranked-vs-replay equality at 32k merges), so both ran
   * on the same corpus definition.
   *
   * Fully deterministic: the vocabulary comes from a fixed-seed RNG and

@@ -176,8 +176,9 @@ class BpeSpec extends SparkSpec {
   }
 
   test("PRODUCTION SCALE: 32k-merge divergence is EXACTLY the self-overlap class (~1 in 58k words)") {
-    // the r15 ProfScale bpeprod arm measured the two forms' throughput on
-    // this corpus (shared builder: ZipfCorpus); this pin checks their
+    // the two forms' throughput was measured on this corpus (shared
+    // builder: ZipfCorpus; ROUND_NOTES, round 15 certification record,
+    // "BPE production measurements"); this pin checks their
     // EQUALITY at the same scale — and finds the honest result: at 32k
     // merges a corpus-trained table DOES produce chain orders (e.g.
     // (a,a) early, (aa,a)/(aa,aa) later), so the documented self-overlap

@@ -101,24 +101,6 @@ class StreamingSpec extends SparkSpec {
     assert(dim.select("stream_id").distinct().count() === 4)
   }
 
-  test("rollup stream: windowed partials with watermark (X4)") {
-    val in = MemoryStream[(Long, Long, Double)](spark)
-    val events = in.toDF().toDF("stream_id", "timestamp", "value")
-    val q = RollupStream.rollup(events, 60, "14 minutes", "value")
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("rollup_out").start()
-    in.addData((1L, 30L, 2.0), (1L, 45L, 4.0), (1L, 70L, 10.0))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("rollup_out").collect()
-    assert(rows.length === 2)
-    val bin0 = rows.find(_.getAs[Long]("binstart") == 0L).get
-    assert(bin0.getAs[Long]("cnt") === 2L)
-    assert(bin0.getAs[java.math.BigDecimal]("s1").doubleValue() === 6.0)
-    val bin60 = rows.find(_.getAs[Long]("binstart") == 60L).get
-    assert(bin60.getAs[Double]("mx") === 10.0)
-  }
-
   test("epoch landing zone compacts into the Layout table; serving view seamless") {
     val dir = tmpDir()
     val spec = Collections.ampExternal

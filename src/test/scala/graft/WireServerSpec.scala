@@ -163,7 +163,8 @@ class WireServerSpec extends SparkSpec {
       assert(zstdRows === plainRows)
       // no size assertion here: sf0.001 chunks are so small that the
       // per-buffer compression framing outweighs the saving — the byte
-      // win is measured at scale in ProfScale `wirearrow`
+      // win is measured at sf1 (ROUND_NOTES, round 13, VERDICT r12 item 6
+      // "Arrow IPC zstd": 38.7 MB plain arrow vs 5.5 MB arrow+zstd)
       // decode both sides to (label, rows-as-value-seqs) and compare
       def jsonRows(frames: Seq[Wire.Message]): Seq[(String, String)] =
         frames.map { f =>
@@ -228,6 +229,59 @@ class WireServerSpec extends SparkSpec {
       val body = new String(push.body, "UTF-8")
       assert(body.contains(""""collection":"amp-external""""))
       assert(body.contains("1704070000"))
+    } finally { sock.close(); server.close() }
+  }
+
+  test("a client that disconnects mid-backfill leaves no prefetch pump behind") {
+    import org.apache.spark.sql.functions._
+    def pumps(): Set[Thread] = {
+      val all = new Array[Thread](Thread.activeCount() * 2 + 16)
+      val n = Thread.enumerate(all)
+      all.take(n).filter(t => t != null && t.isAlive &&
+        t.getName == "graft-history-prefetch").toSet
+    }
+    // 200k rows for one label: far more than the pump's queue (4 × 4,096
+    // rows) and the encode window hold, so the pump is still producing
+    // when the client goes away
+    val t0 = 1704067200L
+    val big = spark.range(200000).select(
+      (col("id") % 4).as("stream_id"),
+      (lit(t0) + col("id")).as("timestamp"),
+      rand(7).as("value"))
+    val bigSvc = new Service(
+      spark,
+      data = Map("amp-external" -> big),
+      streams = Map("amp-external" -> big.select("stream_id").distinct()))
+    val before = pumps()
+    val server = new WireServer(bigSvc)
+    val sock = new Socket()
+    try {
+      // a small receive window: the server blocks on its writes instead
+      // of buffering the whole backfill in the kernel
+      sock.setReceiveBufferSize(4096)
+      sock.connect(new java.net.InetSocketAddress("127.0.0.1", server.boundPort))
+      sock.setSoTimeout(30000)
+      val out = new DataOutputStream(sock.getOutputStream)
+      val in = new DataInputStream(sock.getInputStream)
+      out.write(Wire.pack(0,
+        s"""{"request":"subscribe","collection":"amp-external",
+           |"labels":{"a":[0,1,2,3]},"columns":["value"],
+           |"start":$t0,"stop":${t0 + 200000}}""".stripMargin.getBytes("UTF-8")))
+      out.flush()
+      def readFrame(): Int = {
+        val header = new Array[Byte](Wire.HeaderLen)
+        in.readFully(header)
+        in.readFully(new Array[Byte](java.nio.ByteBuffer.wrap(header, 3, 4).getInt))
+        ((header(1) & 0xff) << 8) | (header(2) & 0xff) // (version, type, length)
+      }
+      assert(readFrame() === Wire.VersionCheck)
+      assert(readFrame() === Wire.History)
+      sock.close() // gone after the first history frame
+      val deadline = System.nanoTime() + 15_000_000_000L
+      while ((pumps() -- before).nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(100)
+      assert((pumps() -- before).isEmpty,
+        "the backfill's prefetch pump outlived its disconnected client")
     } finally { sock.close(); server.close() }
   }
 

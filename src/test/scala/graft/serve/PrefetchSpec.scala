@@ -2,21 +2,11 @@ package graft.serve
 
 import org.apache.spark.sql.functions._
 
-/** Both pump fetch paths are pinned: `window=1` (serial toLocalIterator
-  * drain) and the default windowed path (k concurrent single-partition
-  * jobs, ordered emission — DefaultPumpWindow scaladoc). Every contract
-  * test runs under both, since the serve drain rides whichever the
-  * config selects.
+/** The pump's windowed fetch (k concurrent single-partition jobs,
+  * ordered emission — DefaultPumpWindow scaladoc) against a plain
+  * `collect`/`toLocalIterator` drain, plus its byte budget and close.
   */
 class PrefetchSpec extends graft.SparkSpec {
-  import spark.implicits._
-
-  private def withWindow[T](w: Int)(f: => T): T = {
-    spark.conf.set("spark.graft.serve.pump.window", w.toString)
-    try f finally spark.conf.unset("spark.graft.serve.pump.window")
-  }
-
-  private val windows = Seq(1, 4)
 
   test("row sequence equals collect() on a multi-partition sorted frame") {
     val df = spark.range(0, 10000).toDF("id")
@@ -24,25 +14,26 @@ class PrefetchSpec extends graft.SparkSpec {
       .repartition(7)
       .orderBy("id") // range-partitioned sort: partition order = row order
     val want = df.collect().map(r => (r.getLong(0), r.getLong(1))).toVector
-    for (w <- windows) withWindow(w) {
-      val got = Prefetch.rows(df, None).map(r => (r.getLong(0), r.getLong(1))).toVector
-      assert(got === want, s"window=$w")
-      assert(got.size === 10000)
-    }
+    val got = Prefetch.rows(df, None).map(r => (r.getLong(0), r.getLong(1))).toVector
+    assert(got === want)
+    assert(got.size === 10000)
   }
 
   test("windowed rows carry schema and external types like toLocalIterator") {
     // the serve drain resolves columns by name (fieldIndex) and the wire
     // encoder renders external values — the windowed path's RowEncoder
-    // deserializer must produce the same shape the serial path does
+    // deserializer must produce the same shape Spark's own drain does
     val df = spark.range(0, 500).toDF("id")
       .withColumn("s", concat(lit("v"), col("id")))
       .withColumn("d", col("id") * 1.5)
       .withColumn("maybe", when(col("id") % 3 === 0, col("id")).otherwise(lit(null)))
       .repartition(5)
       .orderBy("id")
-    val want = withWindow(1)(Prefetch.rows(df, None).toVector)
-    val got = withWindow(4)(Prefetch.rows(df, None).toVector)
+    val want = {
+      val it = df.toLocalIterator()
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toVector
+    }
+    val got = Prefetch.rows(df, None).toVector
     assert(got.head.schema.fieldIndex("s") === 1)
     (want zip got).foreach { case (a, b) =>
       assert(a === b)
@@ -53,11 +44,9 @@ class PrefetchSpec extends graft.SparkSpec {
   }
 
   test("empty frame and zero-partition frame yield empty iterators") {
-    for (w <- windows) withWindow(w) {
-      val empty = spark.range(0, 100).filter(col("id") < 0).toDF()
-      assert(!Prefetch.rows(empty, None).hasNext, s"window=$w")
-      assert(Prefetch.rows(spark.emptyDataFrame, None).isEmpty, s"window=$w")
-    }
+    val empty = spark.range(0, 100).filter(col("id") < 0).toDF()
+    assert(!Prefetch.rows(empty, None).hasNext)
+    assert(Prefetch.rows(spark.emptyDataFrame, None).isEmpty)
   }
 
   test("a failing partition surfaces the original Spark exception, unwrapped") {
@@ -68,20 +57,18 @@ class PrefetchSpec extends graft.SparkSpec {
     val df = spark.range(0, 10000).toDF("id")
       .repartition(8)
       .select(boom(col("id")).as("id"))
-    for (w <- windows) withWindow(w) {
-      val it = Prefetch.rows(df, None)
-      val e = intercept[org.apache.spark.SparkException] {
-        while (it.hasNext) it.next()
-      }
-      // unwrapped from the pump's ExecutionException: the consumer sees what
-      // a synchronous draw would have thrown (Service.isCancellation relies
-      // on this to classify watchdog kills)
-      assert(e.getMessage.contains("boom at 7777") ||
-        Option(e.getCause).exists(_.getMessage.contains("boom at 7777")), s"window=$w")
+    val it = Prefetch.rows(df, None)
+    val e = intercept[org.apache.spark.SparkException] {
+      while (it.hasNext) it.next()
     }
+    // unwrapped from the pump's ExecutionException: the consumer sees what
+    // a synchronous draw would have thrown (Service.isCancellation relies
+    // on this to classify watchdog kills)
+    assert(e.getMessage.contains("boom at 7777") ||
+      Option(e.getCause).exists(_.getMessage.contains("boom at 7777")))
   }
 
-  test("partition jobs run under the supplied watchdog job group (both paths)") {
+  test("partition jobs run under the supplied watchdog job group") {
     val sc = spark.sparkContext
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -93,18 +80,14 @@ class PrefetchSpec extends graft.SparkSpec {
     sc.addSparkListener(listener)
     try {
       val df = spark.range(0, 1000).toDF("id").repartition(4)
-      for ((w, group) <- Seq((1, "pf-test-serial"), (4, "pf-test-windowed"))) {
-        withWindow(w) {
-          val n = Prefetch.rows(df, Some((group, "prefetch spec"))).size
-          assert(n === 1000)
-        }
-        // listener events are async — poll until the jobs are visible
-        val deadline = System.nanoTime() + 10_000_000_000L
-        while (seen.asScala.count(_ == group) < 4 && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        // every partition job carried the group (4 partitions → ≥4 jobs)
-        assert(seen.asScala.count(_ == group) >= 4, s"window=$w")
-      }
+      val group = "pf-test-windowed"
+      assert(Prefetch.rows(df, Some((group, "prefetch spec"))).size === 1000)
+      // listener events are async — poll until the jobs are visible
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (seen.asScala.count(_ == group) < 4 && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      // every partition job carried the group (4 partitions → ≥4 jobs)
+      assert(seen.asScala.count(_ == group) >= 4)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -115,15 +98,13 @@ class PrefetchSpec extends graft.SparkSpec {
       all.take(n).filter(t => t != null && t.getName == "graft-encode-pool").toSet
     }
     val before = poolThreads()
-    withWindow(4) {
-      val df = spark.range(0, 5000).toDF("id").repartition(6).orderBy("id")
-      assert(Prefetch.rows(df, None).size === 5000)
-      val boom = udf { (i: Long) =>
-        if (i == 99L) throw new IllegalStateException("boom"); i
-      }
-      val bad = spark.range(0, 1000).toDF("id").repartition(4).select(boom(col("id")).as("id"))
-      intercept[org.apache.spark.SparkException] { Prefetch.rows(bad, None).size }
+    val df = spark.range(0, 5000).toDF("id").repartition(6).orderBy("id")
+    assert(Prefetch.rows(df, None).size === 5000)
+    val boom = udf { (i: Long) =>
+      if (i == 99L) throw new IllegalStateException("boom"); i
     }
+    val bad = spark.range(0, 1000).toDF("id").repartition(4).select(boom(col("id")).as("id"))
+    intercept[org.apache.spark.SparkException] { Prefetch.rows(bad, None).size }
     // the pump's finally closes the windowed fetch on both exits
     val deadline = System.nanoTime() + 5_000_000_000L
     while ((poolThreads() -- before).nonEmpty && System.nanoTime() < deadline)
@@ -134,7 +115,7 @@ class PrefetchSpec extends graft.SparkSpec {
   test("byte budget: a zero budget degrades mapOrderedBudgeted to a serial map") {
     // fat-partition OOM guard (VERDICT r16 #4): when completed results'
     // bytes exceed the budget, only one task may be in flight — the
-    // windowed pump converges to toLocalIterator's 1-partition residency
+    // windowed pump converges to one partition result at a time
     val maxConcurrent = new java.util.concurrent.atomic.AtomicInteger(0)
     val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
     val it = EncodePipeline.mapOrderedBudgeted(
@@ -263,11 +244,35 @@ class PrefetchSpec extends graft.SparkSpec {
       .repartition(6)
       .orderBy("id")
     val want = df.collect().map(r => (r.getLong(0), r.getLong(1))).toVector
-    spark.conf.set("spark.graft.serve.pump.maxBufferedBytes", "1")
-    try withWindow(4) {
-      val got = Prefetch.rows(df, None).map(r => (r.getLong(0), r.getLong(1))).toVector
-      assert(got === want)
-    } finally spark.conf.unset("spark.graft.serve.pump.maxBufferedBytes")
+    val got = Prefetch.rows(df, None, maxBufferedBytes = 1L)
+      .map(r => (r.getLong(0), r.getLong(1))).toVector
+    assert(got === want)
+  }
+
+  test("close mid-drain ends the pump thread and reaps the fetch pool") {
+    // a consumer that stops early (a client gone mid-backfill) must not
+    // leave the pump parked on a full queue until the abandon timeout
+    def live(name: String): Set[Thread] = {
+      val all = new Array[Thread](Thread.activeCount() * 2 + 16)
+      val n = Thread.enumerate(all)
+      all.take(n).filter(t => t != null && t.getName == name).toSet
+    }
+    val pumpsBefore = live("graft-history-prefetch")
+    val poolBefore = live("graft-encode-pool")
+    // 20 partitions of 2k rows: far more than the queue and window hold,
+    // so the pump is still fetching or blocked when the consumer closes
+    val df = spark.range(0, 40000).toDF("id").repartition(20).orderBy("id")
+    val it = Prefetch.rows(df, None)
+    assert(it.next().getLong(0) === 0L)
+    it.close()
+    assert(!it.hasNext)
+    val deadline = System.nanoTime() + 10_000_000_000L
+    while (((live("graft-history-prefetch") -- pumpsBefore).nonEmpty ||
+        (live("graft-encode-pool") -- poolBefore).nonEmpty) &&
+        System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert((live("graft-history-prefetch") -- pumpsBefore).isEmpty, "pump thread left parked")
+    assert((live("graft-encode-pool") -- poolBefore).isEmpty, "fetch pool leaked threads")
   }
 
   private implicit class QueueOps(q: java.util.concurrent.ConcurrentLinkedQueue[String]) {
